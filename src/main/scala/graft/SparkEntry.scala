@@ -26,8 +26,8 @@ object SparkEntry {
     * lifted to the DSL contract queries): memo of the ANALYZED DataFrame per
     * (session, dir, query). Building a contract query's DataFrame re-runs
     * the whole DSL chain — every withColumn/select/join step analyzes an
-    * ever-larger tree eagerly — which PlanCostProbe measured at 40–60 ms per
-    * invocation for the mid-tail (and ~300 ms for the biggest plans). The
+    * ever-larger tree eagerly — measured at 40–60 ms per invocation for the
+    * mid-tail (and ~300 ms for the biggest plans). The
     * memo caches the LOGICAL PLAN ONLY: each action still optimizes, plans
     * and executes from the parquet inputs (the noop-sink write builds a new
     * QueryExecution every save), exactly like Tables.load and the facade's
@@ -43,7 +43,10 @@ object SparkEntry {
     * literals (t58 BPE merge training, u68 SQL-scripting WHILE, d86's
     * min-length guard scalar, s74's power-iteration eigenvectors, d72's
     * collected Bloom words). Memoizing those DataFrames would cache computed
-    * RESULTS, not a plan — every invocation must rebuild them. */
+    * RESULTS, not a plan — every invocation must rebuild them. A build that
+    * routes an as-of join or global merge to its range form also runs one
+    * job, sampling the range bounds; those bounds steer balance only, never
+    * rows, so memoizing such a plan stays safe and it is not listed here. */
   private val eagerBuild = Set("t58", "u68", "d86", "s74", "d72")
 
   /** Sessions whose contexts carry the memo-clearing listener. Mirrors

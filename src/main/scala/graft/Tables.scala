@@ -29,7 +29,7 @@ object Tables {
 
   /** Per-session memo of the LOADED (schema-resolved) DataFrames, keyed on
     * (dir, name). `spark.read.parquet` pays a driver-side file listing +
-    * footer/schema read on every call — ~90 ms/table here (r16 OverheadProbe)
+    * footer/schema read on every call — ~90 ms/table on the r16 box
     * — and every query invocation re-paid it. The memo caches the resolved
     * LOGICAL PLAN only: every action still scans parquet (tasks re-read row
     * groups; nothing row-level is cached), exactly like the long-standing

@@ -477,6 +477,48 @@ case class BmpMetaExpr(child: Expression)
   override def prettyName: String = "graft_bmp_meta"
 }
 
+/** Range partition id: how many of the sorted `bounds` (array<struct>)
+  * sort strictly below the row's struct `left`, ascending with nulls first
+  * in every field — RangePartitioner's bucket search as a pure expression,
+  * so every subtree that computes it agrees on a row's partition. Rows
+  * equal in every field always share an id. Codegen'd: it runs once per
+  * row of a lake-scale sweep. */
+case class RangeBucket(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (a: StructType, ArrayType(b: StructType, _)) if a.map(_.dataType) == b.map(_.dataType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (a, b) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs a struct and an array of that struct, got $a / $b")
+  }
+  override def dataType: DataType = IntegerType
+  @transient private lazy val ordering =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(left.dataType)
+  override def nullSafeEval(row: Any, bounds: Any): Any = {
+    val b = bounds.asInstanceOf[ArrayData]
+    var (lo, hi) = (0, b.numElements())
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (ordering.compare(b.get(mid, left.dataType), row) < 0) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val n = left.dataType.asInstanceOf[StructType].length
+    val Seq(lo, hi, mid) = Seq("lo", "hi", "mid").map(ctx.freshName)
+    nullSafeCodeGen(ctx, ev, (row, b) =>
+      s"""int $lo = 0, $hi = $b.numElements();
+         |while ($lo < $hi) {
+         |  int $mid = ($lo + $hi) >>> 1;
+         |  if (${ctx.genComp(left.dataType, s"$b.getStruct($mid, $n)", row)} < 0) $lo = $mid + 1;
+         |  else $hi = $mid;
+         |}
+         |${ev.value} = $lo;""".stripMargin)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): RangeBucket =
+    copy(left = l, right = r)
+  override def prettyName: String = "graft_range_bucket"
+}
+
 /** SQL registration so the operators are usable from both the DataFrame API
   * (via expr) and plain SQL — mirroring how the reference exposes its custom
   * expressions through the session catalog (reference

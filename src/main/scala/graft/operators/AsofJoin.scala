@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,22 +34,20 @@ import org.apache.spark.sql.functions._
   * probes' columns then quotes' non-key columns (incl. the quote time,
   * for the matched distance).
   *
-  * SCALE (r17, VERDICT r16 item 1): the keyed window sorts each key's
-  * whole stream on ~|keys| cores — a hot or low-cardinality as-of key
-  * (q113's `user_id`; any market-data symbol at 100 TB) serializes onto
-  * one task. Above `graft.asof.rangeMaxBytes` of plan-estimated stream
-  * (64 MB default; `graft.asof.mode=range|window` forces either form) the
-  * tieBreak-free directions route to [[matchScalable]] — the
-  * mergeIntervals carry-fix-up machinery lifted to the as-of stream:
-  * range-partition on (key, time) so ONE key spans many partitions,
-  * window per (partition, key), and repair partition boundaries with
-  * per-(partition, key) quote extremes (a stats frame of ~|keys|+|parts|
-  * rows — the broadcastability precondition; a billion-distinct-key
-  * stream has no per-key skew to fix and should stay `window`). A
-  * tieBreak keeps the keyed window form: the max-tie-break survivor needs
-  * the reversed forward tie order, which the min_by carry cannot spell
-  * generically. Row-identical to the window form by AsofJoinSpec's forced
-  * `range` battery + the hot-key property test. */
+  * Null keys follow DuckDB's ASOF: a quote with a null key never matches,
+  * and a probe with a null key survives with null quote columns.
+  *
+  * Scale: the keyed window sorts each key's whole stream in one task, so a
+  * hot or low-cardinality key (q113's `user_id`; a market-data symbol)
+  * serializes. Above [[RangeSweep.maxWindowBytes]] of plan-estimated
+  * stream, the tieBreak-free directions run the same windows over
+  * [[RangeSweep]]'s (range, key) partitions instead: a key spans many
+  * ranges, and each range's running last/first falls back to a carry — the
+  * last quote of the key's earlier ranges (backward) or the first of its
+  * later ranges (forward). A tieBreak keeps the keyed window form: its
+  * max-tie-break survivor needs the reversed forward tie order, which a
+  * min_by carry cannot spell generically. Row-identical to the window form
+  * by AsofJoinSpec's forced-range battery and RangeSweepSpec. */
 object AsofJoin {
 
   def asof(probes: DataFrame, quotes: DataFrame, keyCols: Seq[String],
@@ -81,13 +79,32 @@ object AsofJoin {
       keys ++ pPayload.map(col) :+
         TimeKeys.toLong(probes, pTime).as("__t") :+ lit(0).as("__isq") :+
         lit(null).cast(qStructType).as("__q"): _*)
-    val qStream = quotes.filter(col(qTime).isNotNull).select(
+    val qStream = quotes
+      .filter(keys.foldLeft(col(qTime).isNotNull)(_ && _.isNotNull)).select(
       keys ++ pPayload.map(c => lit(null).cast(
         probes.schema(c).dataType).as(c)) :+
         TimeKeys.toLong(quotes, qTime).as("__t") :+ lit(1).as("__isq") :+
         struct(qPayload.map(col) :+
           TimeKeys.toLong(quotes, qTime).as("__qt"): _*).as("__q"): _*)
     val all = pStream.unionByName(qStream)
+    // the range form partitions by (range, key) and falls back to the
+    // carried last quote of the key's earlier ranges (__cb) or first quote
+    // of its later ranges (__cf); max_by/min_by skip probes, whose
+    // ordering key is null
+    val ranged = tieBreak.isEmpty && RangeSweep.exceedsWindow(all)
+    val (src, byKey) = if (!ranged) (all, Window.partitionBy(keys: _*)) else {
+      val qOrd = when(col("__isq") === 1, col("__t"))
+      RangeSweep(all, keyCols, Seq("__t"),
+        Seq(max_by(col("__q"), qOrd).as("__lastq"),
+          min_by(col("__q"), qOrd).as("__firstq")),
+        w => Seq(
+          last(col("__lastq"), ignoreNulls = true)
+            .over(w.rowsBetween(Window.unboundedPreceding, -1)).as("__cb"),
+          first(col("__firstq"), ignoreNulls = true)
+            .over(w.rowsBetween(1, Window.unboundedFollowing)).as("__cf")))
+    }
+    def carried(m: Column, carry: String) =
+      if (ranged) coalesce(m, col(carry)) else m
     // backward: at an equal instant the quote sorts BEFORE the probe, so
     // the unbounded-preceding..current frame's running last includes it
     // (at-or-before, inclusive); forward mirrors with the probe first and
@@ -97,23 +114,21 @@ object AsofJoin {
     // running first takes the descending order's first — nulls ordered so
     // a non-null tie-break always wins. The extra sort key never reorders
     // probe-vs-quote rows (they differ on __isq, a higher-priority key).
-    val wBack = Window.partitionBy(keys: _*)
+    val wBack = byKey
       .orderBy(Seq(col("__t").asc_nulls_first, col("__isq").desc) ++
         tieBreak.map(tb => col("__q")(tb).asc_nulls_first): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFwd = Window.partitionBy(keys: _*)
+    val wFwd = byKey
       .orderBy(Seq(col("__t").asc_nulls_last, col("__isq").asc) ++
         tieBreak.map(tb => col("__q")(tb).desc_nulls_last): _*)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val withMatch = if (tieBreak.isEmpty && shouldScale(probes.sparkSession, all))
-      matchScalable(all, keyCols, direction)
-    else direction match {
-      case "backward" =>
-        all.withColumn("__m", last(col("__q"), ignoreNulls = true).over(wBack))
-      case "forward" =>
-        all.withColumn("__m", first(col("__q"), ignoreNulls = true).over(wFwd))
+    val withMatch = direction match {
+      case "backward" => src.withColumn("__m",
+        carried(last(col("__q"), ignoreNulls = true).over(wBack), "__cb"))
+      case "forward" => src.withColumn("__m",
+        carried(first(col("__q"), ignoreNulls = true).over(wFwd), "__cf"))
       case "nearest" =>
-        val b = last(col("__q"), ignoreNulls = true).over(wBack)
+        val b = carried(last(col("__q"), ignoreNulls = true).over(wBack), "__cb")
         // Without a tieBreak, the forward running-first can share wBack's
         // ORDERING (only the frame differs): the two windows then collapse
         // into ONE WindowExec over ONE sort (Spark groups window functions
@@ -129,14 +144,14 @@ object AsofJoin {
         // forward survivor among same-(key, time) quotes must be the MAX
         // tie-break, which needs the reversed tie order — keep the
         // two-sort form exactly there.
-        val f =
+        val f = carried(
           if (tieBreak.isEmpty)
             first(col("__q"), ignoreNulls = true).over(
               wBack.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-          else first(col("__q"), ignoreNulls = true).over(wFwd)
+          else first(col("__q"), ignoreNulls = true).over(wFwd), "__cf")
         val bd = col("__t") - col("__b")("__qt")
         val fd = col("__f")("__qt") - col("__t")
-        all.withColumn("__b", b).withColumn("__f", f)
+        src.withColumn("__b", b).withColumn("__f", f)
           .withColumn("__m",
             when(col("__b").isNull, col("__f"))
               .when(col("__f").isNull, col("__b"))
@@ -154,98 +169,5 @@ object AsofJoin {
     matched.select(
       keys ++ pPayload.map(col) ++
         qPayload.map(c => col("__mOk")(c).as(c)): _*)
-  }
-
-  /** Route to the range-partitioned form? `graft.asof.mode` forces either;
-    * `auto` scales past `graft.asof.rangeMaxBytes` of Catalyst-estimated
-    * union-stream bytes (the mergeIntervals routing discipline — the
-    * scalable form is also correct for small inputs, only latency
-    * differs). */
-  private def shouldScale(s: org.apache.spark.sql.SparkSession,
-      all: DataFrame): Boolean =
-    s.conf.getOption("graft.asof.mode").getOrElse("auto") match {
-      case "range"  => true
-      case "window" => false
-      case _ =>
-        val limit = s.conf
-          .get("graft.asof.rangeMaxBytes", (64L << 20).toString).toLong
-        all.queryExecution.optimizedPlan.stats.sizeInBytes
-          .min(BigInt(Long.MaxValue)).toLong > limit
-    }
-
-  /** The hot-key-safe match pass: one range exchange on (key, time) — a
-    * single key's stream spreads over MANY partitions — then the running
-    * last/first per (partition, key) with two scalar boundary fix-ups,
-    * exactly mergeGlobalScalable's recipe:
-    *
-    *  1. per-(partition, key) quote extremes (`max_by`/`min_by` over the
-    *     quote rows only — probe rows enter with a null ordering key and
-    *     are ignored);
-    *  2. carry-in/carry-out: per key, the last earlier-partition quote
-    *     (backward) / first later-partition quote (forward) via N-row
-    *     prefix/suffix windows over the stats frame (|keys|+|parts| rows,
-    *     never data-sized), broadcast-joined back on (partition, key).
-    *
-    * Equal (key, time) rows land in ONE range partition (the partitioner
-    * buckets by value), so the same-instant quote-before-probe order is
-    * decided locally and carries never split a tie group. The barrier
-    * freezes the sampled range bounds + pid once (the mergeGlobalScalable
-    * non-deterministic-upstream discipline) so all three consumers read
-    * the same partitioning. Null-time probes sort at their key's range
-    * head; whatever the carry hands them is nulled by the caller's
-    * `__t isNotNull` guard — same as the window form. Tie-break-free only
-    * (see the object scaladoc); `nearest` reuses the backward ordering for
-    * both frames under the same distance-0 argument as the window form. */
-  private def matchScalable(all: DataFrame, keyCols: Seq[String],
-      direction: String): DataFrame = {
-    val s = all.sparkSession
-    val keys = keyCols.map(col)
-    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = graft.queries.QueryUtil.barrier(s,
-      all.repartitionByRange(n,
-          keys.map(_.asc) :+ col("__t").asc_nulls_first: _*)
-        .withColumn("__pid", spark_partition_id()))
-    // quote extremes per (pid, key): max_by/min_by ignore null ordering
-    // keys, so probe rows (ordering key nulled) can never be a carry
-    val qOrd = when(col("__isq") === 1, col("__t"))
-    val stats = base.groupBy(col("__pid") +: keys: _*)
-      .agg(max_by(col("__q"), qOrd).as("__lastq"),
-        min_by(col("__q"), qOrd).as("__firstq"))
-    val byKey = Window.partitionBy(keys: _*).orderBy(col("__pid"))
-    val carried = stats
-      .withColumn("__cb", last(col("__lastq"), ignoreNulls = true)
-        .over(byKey.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("__cf", first(col("__firstq"), ignoreNulls = true)
-        .over(byKey.rowsBetween(1, Window.unboundedFollowing)))
-      .select(col("__pid") +: keys :+ col("__cb") :+ col("__cf"): _*)
-    val joined = base.join(broadcast(carried), "__pid" +: keyCols)
-    // same orderings as the window form, scoped to (pid, key); nearest
-    // rides the backward ordering for both frames (distance-0 ties stay
-    // in the backward frame and the bd <= fd rule prefers backward)
-    val ordBack = Window.partitionBy(col("__pid") +: keys: _*)
-      .orderBy(col("__t").asc_nulls_first, col("__isq").desc)
-    val ordFwd = Window.partitionBy(col("__pid") +: keys: _*)
-      .orderBy(col("__t").asc_nulls_last, col("__isq").asc)
-    def bCol = coalesce(last(col("__q"), ignoreNulls = true)
-      .over(ordBack.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-      col("__cb"))
-    def fCol(w: org.apache.spark.sql.expressions.WindowSpec) =
-      coalesce(first(col("__q"), ignoreNulls = true)
-        .over(w.rowsBetween(Window.currentRow, Window.unboundedFollowing)),
-        col("__cf"))
-    val matched = direction match {
-      case "backward" => joined.withColumn("__m", bCol)
-      case "forward"  => joined.withColumn("__m", fCol(ordFwd))
-      case "nearest" =>
-        val bd = col("__t") - col("__b")("__qt")
-        val fd = col("__f")("__qt") - col("__t")
-        joined.withColumn("__b", bCol).withColumn("__f", fCol(ordBack))
-          .withColumn("__m",
-            when(col("__b").isNull, col("__f"))
-              .when(col("__f").isNull, col("__b"))
-              .when(bd <= fd, col("__b")).otherwise(col("__f")))
-          .drop("__b", "__f")
-    }
-    matched.drop("__pid", "__cb", "__cf")
   }
 }

@@ -260,17 +260,18 @@ object IntervalSweep {
     *
     * keyCols = Nil merges GLOBALLY. Small inputs (a blackout/embargo set
     * before an overlap-anti join — q111) run the one-window form; above
-    * `graft.mergeIntervals.globalWindowMaxBytes` (default 64 MB of
-    * plan-estimated input) the merge routes to [[mergeGlobalScalable]] —
-    * range-partition + per-range sweep + scalar carry-in fix-up — so a
-    * lake-scale global merge never funnels through a single window
-    * partition. Both forms are row-identical (IntervalSweepSpec). */
+    * [[RangeSweep.maxWindowBytes]] of plan-estimated input the same sweep
+    * runs over [[RangeSweep]]'s ranges of (lo, hi), so a lake-scale global
+    * merge never funnels through one window partition. Two carries repair
+    * the range boundaries: the prefix max of the earlier ranges' hi joins
+    * the island-start test (an island spanning many ranges continues, never
+    * restarts), and the prefix sum of the earlier ranges' island starts
+    * offsets each range's local island numbers to global ones. Both forms
+    * are row-identical (IntervalSweepSpec, RangeSweepSpec). */
   def mergeIntervals(df: DataFrame, keyCols: Seq[String],
       lo: String, hi: String): DataFrame = {
     TimeKeys.requireSameFamily("mergeIntervals", df, Seq(lo, hi))
     val dt = df.schema(lo).dataType
-    if (keyCols.isEmpty && estimatedBytes(df) > globalWindowMaxBytes(df))
-      return mergeGlobalScalable(df, lo, hi, dt)
     val keys = keyCols.map(col)
     // r16 (guide §2.4: share the sort): materialize the Long key images
     // ONCE as columns and order both windows by those attribute refs. With
@@ -282,120 +283,38 @@ object IntervalSweep {
     val withK = df.filter(col(hi) >= col(lo))
       .withColumn("__klo", TimeKeys.toLong(col(lo), dt))
       .withColumn("__khi", TimeKeys.toLong(col(hi), dt))
-    val ord = Window.partitionBy(keys: _*).orderBy(col("__klo"), col("__khi"))
-    val prevMax =
+    val ranged = keyCols.isEmpty && RangeSweep.exceedsWindow(df)
+    val (src, byKey) = if (!ranged) (withK, Window.partitionBy(keys: _*))
+      else RangeSweep(withK, Nil, Seq("__klo", "__khi"),
+        Seq(max(col("__khi")).as("__maxhi")),
+        w => Seq(max(col("__maxhi"))
+          .over(w.rowsBetween(Window.unboundedPreceding, -1)).as("__carry")))
+    val ord = byKey.orderBy(col("__klo"), col("__khi"))
+    val local =
       max(col("__khi")).over(ord.rowsBetween(Window.unboundedPreceding, -1))
-    withK
+    // greatest() skips nulls: null only when there is no earlier interval
+    val prevMax = if (ranged) greatest(local, col("__carry")) else local
+    val flagged = src
       .withColumn("__new",
         when(prevMax.isNull || col("__klo") > prevMax + 1, 1L).otherwise(0L))
       .withColumn("__island", sum(col("__new"))
         .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    // range-local island numbers, offset by the earlier ranges' starts
+    val numbered = if (!ranged) flagged else {
+      val offs = flagged.groupBy(col("__pid"))
+        .agg(sum(col("__new")).as("__starts"))
+        .select(col("__pid"), coalesce(sum(col("__starts"))
+          .over(Window.orderBy(col("__pid"))
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+          .as("__off"))
+      flagged.join(offs, "__pid")
+        .withColumn("__island", col("__island") + col("__off"))
+    }
+    numbered
       .groupBy(keys :+ col("__island"): _*)
       .agg(TimeKeys.fromLong(min(col("__klo")), dt).as("island_lo"),
         TimeKeys.fromLong(max(col("__khi")), dt).as("island_hi"),
         count(lit(1)).as("n_intervals"))
       .drop("__island")
-  }
-
-  private def globalWindowMaxBytes(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get("graft.mergeIntervals.globalWindowMaxBytes", (64L << 20).toString)
-      .toLong
-
-  /** Catalyst's plan-time size estimate — no job, good enough to pick a
-    * merge strategy (the scalable form is also correct for small inputs;
-    * only latency differs). */
-  private def estimatedBytes(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
-
-  /** The lake-scale global merge (VERDICT r14 item 2): instead of one
-    * window partition holding EVERY interval, range-partition by (lo, hi),
-    * sweep each range partition locally, and repair the boundaries with
-    * two SCALAR fix-ups derived from per-partition stats (N rows for N
-    * partitions — never data-sized):
-    *
-    *  1. carry-in: prefix-max of per-partition max(hi) tells each
-    *     partition the furthest any earlier interval reaches, which is
-    *     the only cross-partition fact the island-start decision needs
-    *     (`lo > max(carry, local running max) + 1`). An island spanning
-    *     many partitions is thus CONTINUED, never restarted.
-    *  2. island numbering: prefix-sum of per-partition start counts
-    *     offsets the local running start index into a global island id;
-    *     rows continuing a carried island get the previous global id by
-    *     construction (offset + 0).
-    *
-    * The islands then aggregate by global id — an ordinary hash shuffle
-    * with island-count cardinality. Plan shape: one range exchange + one
-    * per-partition window + two broadcast joins against N-row stats
-    * frames (whose own windows order N rows, not data). Exact for any
-    * partitioning because range partitions respect the (lo, hi) sweep
-    * order — proven row-identical to the window form in
-    * IntervalSweepSpec, plan-asserted single-partition-window-free.
-    *
-    * Barrier (r16, VERDICT r15 item 2): `base` feeds THREE subtrees (the
-    * carry stats, the flagged data pass, the island offsets) and its
-    * `spark_partition_id()` column is only meaningful if every subtree
-    * reads the SAME physical partitioning — exchange reuse made that hold
-    * in practice, but a non-deterministic upstream (a sampled or salted
-    * frame) or a disabled exchange cache would let each subtree re-sample
-    * range boundaries (and re-draw the rows themselves) independently,
-    * silently mis-stitching islands. The lazy localCheckpoint freezes
-    * (lo, hi, pid) once at first execution: block-level locking computes
-    * each partition exactly once, every branch reads the frozen copy, and
-    * the RDD-level persist is GC-cleaned by the ContextCleaner (no
-    * CacheManager entry to leak). Proven by the rand-salted-input spec in
-    * IntervalSweepSpec. */
-  private def mergeGlobalScalable(df: DataFrame, lo: String, hi: String,
-      dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    // r17: the freeze barrier routes through QueryUtil.barrier — reliable
-    // checkpoint on clusters that configure a checkpoint dir (an executor
-    // loss must not kill the frozen base mid-merge), localCheckpoint locally.
-    val base = graft.queries.QueryUtil.barrier(
-      df.sparkSession, rangedBase(df, lo, hi, dt))
-    // per-partition stats: N rows; the prefix windows below order N rows
-    // on one partition — bounded by the partition COUNT, not the data
-    val wPrev = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = base.groupBy(col("__pid"))
-      .agg(max(col("__hi")).as("__maxhi"))
-      .withColumn("__carry", max(col("__maxhi")).over(wPrev))
-      .select(col("__pid"), col("__carry"))
-    val ord = Window.partitionBy(col("__pid")).orderBy(col("__lo"), col("__hi"))
-    val prevLocal = max(col("__hi"))
-      .over(ord.rowsBetween(Window.unboundedPreceding, -1))
-    // greatest() skips nulls: null only when BOTH carry and local prefix
-    // are null — exactly the window form's "first interval" case
-    val prevAll = greatest(prevLocal, col("__carry"))
-    val flagged = base.join(broadcast(carry), Seq("__pid"), "left")
-      .withColumn("__new",
-        when(prevAll.isNull || col("__lo") > prevAll + 1, 1L).otherwise(0L))
-      .withColumn("__lidx", sum(col("__new"))
-        .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val offs = flagged.groupBy(col("__pid"))
-      .agg(sum(col("__new")).as("__starts"))
-      .withColumn("__off", coalesce(sum(col("__starts")).over(wPrev), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    flagged.join(broadcast(offs), Seq("__pid"))
-      .withColumn("__island", col("__off") + col("__lidx"))
-      .groupBy(col("__island"))
-      .agg(TimeKeys.fromLong(min(col("__lo")), dt).as("island_lo"),
-        TimeKeys.fromLong(max(col("__hi")), dt).as("island_hi"),
-        count(lit(1)).as("n_intervals"))
-      .select(col("island_lo"), col("island_hi"), col("n_intervals"))
-  }
-
-  /** The scalable merge's pre-barrier input: normalized Long bounds, range
-    * partitioned on (lo, hi), partition id frozen as a column. Split out so
-    * the spec can plan-assert the range exchange (the checkpoint hides it
-    * from the final plan). */
-  private[graft] def rangedBase(df: DataFrame, lo: String, hi: String,
-      dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.filter(col(hi) >= col(lo))
-      .select(TimeKeys.toLong(col(lo), dt).as("__lo"),
-        TimeKeys.toLong(col(hi), dt).as("__hi"))
-      .repartitionByRange(n, col("__lo"), col("__hi"))
-      .withColumn("__pid", spark_partition_id())
   }
 }

@@ -104,7 +104,7 @@ private[graft] object QueryUtil {
     * Both forms return a LogicalRDD leaf, so the planning-cost truncation
     * (consumers analyze a one-node subtree) is identical; both preserve
     * originStats for broadcast decisions. */
-  private[graft] def barrier(s: SparkSession, df: DataFrame): DataFrame = {
+  private def barrier(s: SparkSession, df: DataFrame): DataFrame = {
     val reliable = s.conf.getOption("graft.barrier.mode").getOrElse("auto") match {
       case "reliable" => true
       case "local"    => false

@@ -182,6 +182,11 @@ object ScaleProbe {
         }
       }
     }
+    def forcedRange(build: => DataFrame): DataFrame = {
+      val saved = graft.operators.RangeSweep.maxWindowBytes
+      graft.operators.RangeSweep.maxWindowBytes = 0
+      try build finally graft.operators.RangeSweep.maxWindowBytes = saved
+    }
     val extraProbes: Map[String, (SparkSession, String) => DataFrame] = Map(
       "d54_triple" -> ((s, d) =>
         graft.queries.DedupOps.simhashPairs(s, d, choose = 3, maxHamming = 5)
@@ -252,12 +257,6 @@ object ScaleProbe {
         graft.queries.QueryUtil.unpersistKeyed(s, "svec:s80:")
         graft.SparkEntry.queries("s80")(s, d)
       }),
-      // the scale-safe GLOBAL merge (r15): force the range-partitioned
-      // carry-in form (threshold 0) over every event session — the
-      // contract queries only merge small blackout sets through the
-      // window form, so this probe is what proves the lake-scale path's
-      // growth class. Conf restored immediately: routing is decided at
-      // operator-call time, before the probe's noop write runs.
       // standing interval index: probe a FIXED base-sf point batch against
       // an index built (outside timing) from the ×K interval history — the
       // d64_probe/d65_probe economics for the temporal family: the index
@@ -271,17 +270,24 @@ object ScaleProbe {
             .filter(col("user_id") % 4 === 2)
             .select(col("event_id").as("pid"), col("ts").as("pt")),
           "pt")),
-      "merge_scalable_probe" -> ((s, d) => {
-        val prev = s.conf.getOption("graft.mergeIntervals.globalWindowMaxBytes")
-        s.conf.set("graft.mergeIntervals.globalWindowMaxBytes", "0")
-        try {
-          val iv = graft.Tables.load(s, d, "events").select(col("ts").as("lo"))
-            .withColumn("hi", col("lo") + expr("INTERVAL 1799 SECONDS"))
-          graft.operators.IntervalSweep.mergeIntervals(iv, Nil, "lo", "hi")
-        } finally prev match {
-          case Some(v) => s.conf.set("graft.mergeIntervals.globalWindowMaxBytes", v)
-          case None => s.conf.unset("graft.mergeIntervals.globalWindowMaxBytes")
-        }
+      // the range forms of the global merge and the as-of join (over every
+      // event session; q117's backward as-of without its tieBreak): the
+      // contract queries only run their window forms, so these probes are
+      // what prove the lake-scale paths' growth class. The threshold is
+      // restored at once: routing is decided at operator-call time, before
+      // the probe's noop write runs.
+      "merge_scalable_probe" -> ((s, d) => forcedRange {
+        val iv = graft.Tables.load(s, d, "events").select(col("ts").as("lo"))
+          .withColumn("hi", col("lo") + expr("INTERVAL 1799 SECONDS"))
+        graft.operators.IntervalSweep.mergeIntervals(iv, Nil, "lo", "hi")
+      }),
+      "asof_scalable_probe" -> ((s, d) => forcedRange {
+        val ev = graft.Tables.load(s, d, "events")
+        def side(rem: Int, id: String, t: String) =
+          ev.filter(pmod(col("user_id"), lit(4)) === rem)
+            .select(col("event_type").as("k"), col("event_id").as(id), col("ts").as(t))
+        graft.operators.AsofJoin.asof(side(2, "pid", "pt"), side(3, "q_eid", "qt"),
+          Seq("k"), "pt", "qt", "backward", tolerance = Some(7200L * 1000000L))
       }))
 
     // max single-task seconds of the min-time warm pass, for skew probes
@@ -541,7 +547,8 @@ object ScaleProbe {
       val dir = s"$workDir/events_x$k"
       if (k > 1 && wanted("q64", "q65", "q66", "q67", "q108", "q109", "q111",
           "q113", "q114", "q115", "q116", "q117", "q119", "q120", "q121",
-          "d94", "ivx_probe", "q122", "q123", "q124", "merge_scalable_probe") &&
+          "d94", "ivx_probe", "q122", "q123", "q124", "merge_scalable_probe",
+          "asof_scalable_probe") &&
           !new java.io.File(s"$dir/events.parquet").exists())
         synthEvents(k, dir)
       if (k > 1 && wanted("q113", "q118") &&
@@ -628,9 +635,10 @@ object ScaleProbe {
         }
         run("ivx_probe", k, e)
       }
-      // the scale-safe global merge over ALL sessions (forced scalable
-      // path): one range exchange + per-partition sweeps + N-row fix-ups
+      // the forced range forms: one data exchange on (range, key) +
+      // per-range sweeps + carries aggregated before the exchange
       run("merge_scalable_probe", k, e)
+      run("asof_scalable_probe", k, e)
       graft.queries.QueryUtil.unpersistKeyed(spark, "") // see the docs loop
     }
 

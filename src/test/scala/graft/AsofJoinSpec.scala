@@ -22,16 +22,22 @@ class AsofJoinSpec extends AnyFunSuite {
 
   // probes: equal-instant probe (t=20 with a quote at 20 — inclusive both
   // directions), before-all (t=-50), after-all (t=99), exact mid-tie
-  // (t=25 between quotes 20 and 30 — nearest must take backward), null t
+  // (t=25 between quotes 20 and 30 — nearest must take backward), null t.
+  // Null keys follow DuckDB's ASOF: the null-key quotes never match, the
+  // null-key probes (one at a null-key quote's instant) survive unmatched.
   private val probes = Seq(
     (1L, Some(-50L), 100L), (1L, Some(5L), 101L),
     (1L, Some(20L), 102L), (1L, Some(25L), 103L),
     (1L, Some(99L), 104L), (1L, (None: Option[Long]), 105L),
     (2L, Some(7L), 200L))
     .toDF("k", "pt", "pid")
+    .union(Seq[(Option[Long], Option[Long], Long)](
+      (None, Some(20L), 300L), (None, Some(33L), 301L)).toDF("k", "pt", "pid"))
   private val quotes = Seq(
     (1L, 0L, 10.0), (1L, 20L, 20.0), (1L, 30L, 30.0), (2L, 50L, 50.0))
     .toDF("k", "qt", "px")
+    .union(Seq[(Option[Long], Long, Double)](
+      (None, 20L, 90.0), (None, 30L, 91.0)).toDF("k", "qt", "px"))
 
   private def naive(direction: String, tol: Option[Long]): Seq[String] = {
     val cand = probes.join(quotes, Seq("k"), "left")
@@ -140,27 +146,25 @@ class AsofJoinSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  // r17 (VERDICT r16 item 1): the range-partitioned hot-key-safe form must
-  // be row-identical to the keyed window form — the same naive-argmin
-  // battery, forced through `graft.asof.mode=range`.
+  // The hot-key-safe range form must be row-identical to the keyed window
+  // form: the same naive-argmin battery, with the range form forced.
   for (dir <- Seq("backward", "forward", "nearest");
        tol <- Seq(None, Some(6L)))
     test(s"scalable (range) asof $dir tolerance=$tol == naive argmin") {
-      spark.conf.set("graft.asof.mode", "range")
-      try {
-        val got = AsofJoin.asof(probes, quotes, Seq("k"), "pt", "qt", dir, tol)
-          .select(col("k"), col("pt"), col("pid"), col("qt"), col("px"))
-          .collect().map(_.toString).sorted.toSeq
-        val want = naive(dir, tol)
-        assert(got == want && got.nonEmpty,
-          s"extra=${got.diff(want)} missing=${want.diff(got)}")
-      } finally spark.conf.set("graft.asof.mode", "auto")
+      val got = RangeSweepSpec.ranged(
+        AsofJoin.asof(probes, quotes, Seq("k"), "pt", "qt", dir, tol))
+        .select(col("k"), col("pt"), col("pid"), col("qt"), col("px"))
+        .collect().map(_.toString).sorted.toSeq
+      val want = naive(dir, tol)
+      assert(got == want && got.nonEmpty,
+        s"extra=${got.diff(want)} missing=${want.diff(got)}")
     }
 
   test("scalable asof: hot key spanning many range partitions == window form") {
-    // one hot key owns 600 of 740 rows — the 100 TB skew shape the range
+    // one hot key owns 600 of 755 rows — the 100 TB skew shape the range
     // form exists for; quote times unique per key so the survivor is
-    // deterministic and the two forms must agree exactly
+    // deterministic and the two forms must agree exactly. Null-key probes
+    // and quotes ride along: the probes survive unmatched in both forms.
     val rnd = new scala.util.Random(17)
     val hotP = (1 to 400).map(i => (1L, Some(rnd.nextInt(2000).toLong), 1000L + i))
     val hotQ = rnd.shuffle((0 until 2200 by 11).toList).take(200)
@@ -169,46 +173,50 @@ class AsofJoinSpec extends AnyFunSuite {
       (2L + i % 20, Some(rnd.nextInt(500).toLong), 5000L + i))
     val coldQ = (0 until 20).flatMap(k => Seq((2L + k, 100L, k * 1.0),
       (2L + k, 400L, k * 2.0)))
+    val nullP = (1 to 10).map(i =>
+      (None: Option[Long], Some(rnd.nextInt(2000).toLong), 9000L + i))
+    val nullQ = (1 to 5).map(i => (None: Option[Long], i * 400L, i * 0.5))
     val p = (hotP ++ coldP).toDF("k", "pt", "pid")
+      .union(nullP.toDF("k", "pt", "pid"))
     val q = (hotQ ++ coldQ).toDF("k", "qt", "px")
+      .union(nullQ.toDF("k", "qt", "px"))
     for (dir <- Seq("backward", "forward", "nearest"); tol <- Seq(None, Some(25L))) {
-      def run(mode: String): Seq[String] = {
-        spark.conf.set("graft.asof.mode", mode)
-        try AsofJoin.asof(p, q, Seq("k"), "pt", "qt", dir, tol)
-          .select(col("pid"), col("qt"), col("px"))
-          .collect().map(_.toString).sorted.toSeq
-        finally spark.conf.set("graft.asof.mode", "auto")
-      }
-      val range = run("range")
-      val window = run("window")
-      assert(range == window && range.size == 540,
+      def run(): Seq[String] = AsofJoin.asof(p, q, Seq("k"), "pt", "qt", dir, tol)
+        .select(col("pid"), col("qt"), col("px"))
+        .collect().map(_.toString).sorted.toSeq
+      val range = RangeSweepSpec.ranged(run())
+      val window = run()
+      assert(range == window && range.size == 550,
         s"$dir tol=$tol: extra=${range.diff(window)} missing=${window.diff(range)}")
+      assert(window.count(_.endsWith(",null,null]")) >= 10)
     }
   }
 
-  test("scalable asof plan: range exchange, windows keyed (partition, key) — no whole-key sort funnel") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    spark.conf.set("graft.asof.mode", "range")
+  // The range form runs without a checkpoint and shuffles its rows once:
+  // the stats and carries are aggregated before any exchange, and the
+  // (__pid, key)-keyed windows reuse the data exchange whether the carry
+  // join is broadcast or shuffled.
+  test("scalable asof plan: one data exchange, no checkpoint, windows keyed (partition, key)") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = AsofJoin.asof(probes, quotes, Seq("k"), "pt", "qt", "nearest", None)
-      df.collect() // materialize the lazy barrier so the final plan is real
-      val plan = df.queryExecution.executedPlan
-      val rangeEx = plan.collect {
-        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      for (dir <- Seq("backward", "forward", "nearest")) {
+        def run(): (Seq[String], org.apache.spark.sql.execution.SparkPlan) = {
+          val df = AsofJoin.asof(probes, quotes, Seq("k"), "pt", "qt", dir, None)
+          (df.collect().map(_.toString).sorted.toSeq, df.queryExecution.executedPlan)
+        }
+        val (window, _) = run()
+        val (range, plan) = RangeSweepSpec.ranged(run())
+        RangeSweepSpec.assertSweepPlan(plan, keyed = true)
+        assert(range == window, s"$dir: extra=${range.diff(window)} missing=${window.diff(range)}")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try {
+          val (shuffled, sPlan) = RangeSweepSpec.ranged(run())
+          RangeSweepSpec.assertSweepPlan(sPlan, keyed = true)
+          assert(shuffled == window,
+            s"$dir, no broadcast: extra=${shuffled.diff(window)} missing=${window.diff(shuffled)}")
+        } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
-      assert(rangeEx.nonEmpty, s"expected a range exchange on (key, time):\n$plan")
-      // the data-path windows must include __pid in their partition spec —
-      // a hot key then NEVER funnels into one task
-      import org.apache.spark.sql.execution.window.WindowExec
-      val dataWins = plan.collect { case w: WindowExec => w }
-        .filter(_.partitionSpec.exists(_.toString.contains("__pid")))
-      assert(dataWins.nonEmpty, s"expected (__pid, key)-scoped windows:\n$plan")
-    } finally {
-      spark.conf.set("graft.asof.mode", "auto")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("asof is one shuffle for backward/forward (window exchange only)") {

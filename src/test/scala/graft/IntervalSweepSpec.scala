@@ -226,10 +226,8 @@ class IntervalSweepSpec extends AnyFunSuite {
   // + carry-in fix-up) is row-identical to the one-window form, including
   // when one giant interval spans every range partition.
   test("scalable global merge == window form; no full-data single-partition window") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     // 500 intervals in chains of 3 with gaps (the island structure), plus
     // one giant interval covering rows 100..399's region — its island must
     // CARRY across range partitions, swallowing interior islands
@@ -239,23 +237,12 @@ class IntervalSweepSpec extends AnyFunSuite {
       .unionAll(Seq((1000L, 4000L)).toDF("lo", "hi"))
     val windowed = IntervalSweep.mergeIntervals(raw, Nil, "lo", "hi")
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set("graft.mergeIntervals.globalWindowMaxBytes", "0")
     spark.conf.set("spark.sql.adaptive.enabled", "false") // traversable plan
     try {
-      val scal = IntervalSweep.mergeIntervals(raw, Nil, "lo", "hi")
+      val scal = RangeSweepSpec.ranged(IntervalSweep.mergeIntervals(raw, Nil, "lo", "hi"))
       val got = scal.collect().map(_.toString).sorted.toSeq
       assert(got == windowed && got.nonEmpty,
         s"extra=${got.diff(windowed).take(5)} missing=${windowed.diff(got).take(5)}")
-      // plan shape: the data path is RANGE-partitioned. r16: the barrier
-      // localCheckpoint hides that exchange from the final plan (the three
-      // subtrees read the frozen RDD), so assert it on the pre-barrier
-      // base the operator checkpoints.
-      val basePlan = IntervalSweep
-        .rangedBase(raw, "lo", "hi", org.apache.spark.sql.types.LongType)
-        .queryExecution.executedPlan
-      assert(basePlan.collect { case e: ShuffleExchangeExec
-          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }.nonEmpty,
-        s"no range exchange in scalable merge base plan:\n$basePlan")
       // any single-partition window in the final plan orders only N-row
       // per-partition STATS (an aggregate sits below it), never the data
       val plan = scal.queryExecution.executedPlan
@@ -266,19 +253,43 @@ class IntervalSweepSpec extends AnyFunSuite {
         assert(w.collectFirst { case a: BaseAggregateExec => a }.nonEmpty,
           s"single-partition window runs over raw data:\n$w")
       }
-    } finally {
-      spark.conf.unset("graft.mergeIntervals.globalWindowMaxBytes")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  // r16 (VERDICT r15 item 2 / ADVICE): the scalable merge's base feeds
-  // three subtrees whose consistency used to lean on exchange reuse. With
-  // reuse DISABLED and a rand-salted repartition upstream (each recompute
-  // free to lay rows out differently, range boundaries re-sampled per
-  // branch), the localCheckpoint barrier must still yield islands
-  // identical to the one-window form — proving (lo, hi, __pid) is
-  // materialized once and shared, not recomputed per branch.
+  // The range form runs without a checkpoint and shuffles its rows once:
+  // both carries are aggregated per range, and the __pid-keyed windows and
+  // joins reuse the data exchange whether the joins broadcast or shuffle.
+  test("scalable global merge plan: one data exchange, no checkpoint, windows keyed by partition") {
+    val raw = spark.range(300).select(
+      (col("id") * 10 + col("id") % 3).as("lo"),
+      (col("id") * 10 + col("id") % 3 + 12).as("hi"))
+      .unionAll(Seq((500L, 2000L)).toDF("lo", "hi"))
+    def run(): (Seq[String], org.apache.spark.sql.execution.SparkPlan) = {
+      val df = IntervalSweep.mergeIntervals(raw, Nil, "lo", "hi")
+      (df.collect().map(_.toString).sorted.toSeq, df.queryExecution.executedPlan)
+    }
+    val (window, _) = run()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (range, plan) = RangeSweepSpec.ranged(run())
+      RangeSweepSpec.assertSweepPlan(plan, keyed = false)
+      assert(range == window, s"extra=${range.diff(window)} missing=${window.diff(range)}")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val (shuffled, sPlan) = RangeSweepSpec.ranged(run())
+        RangeSweepSpec.assertSweepPlan(sPlan, keyed = false)
+        assert(shuffled == window,
+          s"no broadcast: extra=${shuffled.diff(window)} missing=${window.diff(shuffled)}")
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  // r16 (VERDICT r15 item 2 / ADVICE): the scalable merge's rows feed
+  // three subtrees (the carry stats, the swept data, the island offsets).
+  // With exchange reuse DISABLED and a rand-salted repartition upstream
+  // (each recompute free to lay rows out differently), the islands must
+  // still equal the one-window form's: the range id is a function of the
+  // row alone, so every subtree agrees on it without a barrier.
   test("scalable global merge is stable under a non-deterministic upstream (barrier)") {
     val raw = spark.range(400).select(
       (col("id") * 10 + col("id") % 3).as("lo"),
@@ -286,21 +297,17 @@ class IntervalSweepSpec extends AnyFunSuite {
       .unionAll(Seq((800L, 3000L)).toDF("lo", "hi"))
     val expected = IntervalSweep.mergeIntervals(raw, Nil, "lo", "hi")
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set("graft.mergeIntervals.globalWindowMaxBytes", "0")
     spark.conf.set("spark.sql.exchange.reuse", "false")
     try {
       for (round <- 1 to 3) {
         val salted = raw.repartition(7, rand(seed = round))
-        val got = IntervalSweep.mergeIntervals(salted, Nil, "lo", "hi")
+        val got = RangeSweepSpec.ranged(IntervalSweep.mergeIntervals(salted, Nil, "lo", "hi"))
           .collect().map(_.toString).sorted.toSeq
         assert(got == expected,
           s"round $round: extra=${got.diff(expected).take(5)} " +
             s"missing=${expected.diff(got).take(5)}")
       }
-    } finally {
-      spark.conf.unset("graft.mergeIntervals.globalWindowMaxBytes")
-      spark.conf.unset("spark.sql.exchange.reuse")
-    }
+    } finally spark.conf.unset("spark.sql.exchange.reuse")
   }
 
   test("both sweeps are ONE shuffle: the window exchange's hash(keys) satisfies every later grouping") {

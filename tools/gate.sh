@@ -52,7 +52,7 @@ bash tools/x10_gate.sh
 section_result "x10_gate" $?
 
 echo "== scale gate (1x vs 10x growth classes; VERDICT r11 item 5) =="
-SCALE_QUERIES=d71,d82,d83,s61,s76,s78_probe,s79_probe,s80_probe,t73,s84,q108,q109,q111,q113,q114,q115,q116,q117,q118,q119,q120,q121,d94,d95,d96,ivx_probe,q122,q123,q124,merge_scalable_probe \
+SCALE_QUERIES=d71,d82,d83,s61,s76,s78_probe,s79_probe,s80_probe,t73,s84,q108,q109,q111,q113,q114,q115,q116,q117,q118,q119,q120,q121,d94,d95,d96,ivx_probe,q122,q123,q124,merge_scalable_probe,asof_scalable_probe \
 SCALE_FACTORS=1,10 \
   sbt -batch "runMain graft.tools.ScaleProbe /root/testdata/sf0.1 /tmp/graft_scale" 2>&1 \
   | grep "\[scale\]" | tee /tmp/scale_gate.txt || true

@@ -58,6 +58,9 @@ CLASSES = {
     "q120": ("linear", 15.0),
     "q121": ("linear", 15.0),
     "merge_scalable_probe": ("linear", 15.0),
+    # asof_scalable_probe: the forced range form of q117's backward as-of
+    # (no tieBreak) — one data exchange on (range, key) + per-range sweeps
+    "asof_scalable_probe": ("linear", 15.0),
     # q116 overlap FULL OUTER: replicas share the time axis, so matched
     # pairs genuinely grow x K^2 (output-bound, like the s61 pair family) —
     # the operator is still shuffle-banded; the bound reflects the output,
