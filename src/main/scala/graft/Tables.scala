@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetSchemaBridge
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -28,12 +29,13 @@ object Tables {
   private val tsCols: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
   /** Per-session memo of the LOADED (schema-resolved) DataFrames, keyed on
-    * (dir, name). `spark.read.parquet` pays a driver-side file listing +
-    * footer/schema read on every call — ~90 ms/table on the r16 box
-    * — and every query invocation re-paid it. The memo caches the resolved
-    * LOGICAL PLAN only: every action still scans parquet (tasks re-read row
-    * groups; nothing row-level is cached), exactly like the long-standing
-    * `registerAll` temp views the SQL-based queries already go through.
+    * (dir, name). Resolving a read costs a driver-side file listing and a
+    * footer read (see [[readParquet]]: no Spark job, but still I/O and
+    * analysis on every call), which every query invocation would re-pay.
+    * The memo caches the resolved LOGICAL PLAN only: every action still
+    * scans parquet (tasks re-read row groups; nothing row-level is cached),
+    * exactly like the long-standing `registerAll` temp views the SQL-based
+    * queries already go through.
     *
     * PRECONDITION (r16 ADVICE): inputs under `dir` are immutable for the
     * session's lifetime — the memo pins the first call's file listing and
@@ -81,8 +83,16 @@ object Tables {
     }
   }
 
+  /** Read an UNPARTITIONED parquet path without a Spark job: the schema
+    * comes from the footer on the driver (`ParquetSchemaBridge`), where
+    * `spark.read.parquet` would launch a schema-inference job per call.
+    * Partitioned layouts keep `spark.read.parquet` (`Sinks.readPartitioned`),
+    * whose partition discovery adds the directory-name columns. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetSchemaBridge.footerSchema(spark, path)).parquet(path)
+
   private def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     tsCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       d.schema(c).dataType match {
         case LongType         => d.withColumn(c, timestamp_micros(expr(s"`$c` DIV 1000")))
@@ -113,7 +123,7 @@ object Tables {
 
   /** Register every corpus table as a temp view named after the table.
     * Memoized per (session, dir): SQL-based queries call this on every
-    * invocation, and re-reading ten parquet footers each time is waste. */
+    * invocation, and re-resolving ten views each time is waste. */
   private val registered = new java.util.WeakHashMap[SparkSession, String]()
   def registerAll(spark: SparkSession, dir: String): Unit = registered.synchronized {
     if (registered.get(spark) != dir) {

@@ -628,7 +628,7 @@ object SimilarityOps {
 
   /** The stored quantizer sidecar of a writeIvfCorpusQuantized layout. */
   def readIvfCentroids(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"${path}_centroids")
+    Tables.readParquet(s, s"${path}_centroids")
 
   /** Day-2 of the vector-index loop: fold a batch of NEW vectors (nid,
     * v: array<float>) into a stored quantized layout — encode against the
@@ -730,7 +730,7 @@ object SimilarityOps {
 
   /** The stored grid sidecar of a writeIvfCorpusQuantized layout. */
   def readQ8Stats(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"${path}_stats")
+    Tables.readParquet(s, s"${path}_stats")
 
   /** Asymmetric rerank over int8 inverted lists: float queries against
     * coded candidates via graft_cosine_q8 (dequantize fused into the dot
@@ -1024,7 +1024,7 @@ object SimilarityOps {
 
   /** The PQ codebook sidecar of a [[writeIvfCorpusPq]] layout. */
   def readPqCodebook(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"${path}_codebook")
+    Tables.readParquet(s, s"${path}_codebook")
 
   /** Self-contained probe of a stored IVF-PQ layout: routing under the
     * layout's centroid sidecar, ADC over its codes with the codebook

@@ -26,6 +26,8 @@ object Sinks {
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.repartition(numFiles).write.mode(mode).parquet(path)
 
+  // spark.read.parquet, not Tables.readParquet: partition discovery adds the
+  // directory-name columns, which a footer schema does not have.
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetSchemaBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
@@ -67,7 +68,7 @@ object StreamingOps {
       p.toFile.deleteOnExit()
       p
     })
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = ParquetSchemaBridge.footerSchema(spark, s"$dir/events.parquet")("ts").dataType
     val raw = spark.readStream
       .schema(eventsRawSchema(tsType))
       .parquet(staging.toString)
