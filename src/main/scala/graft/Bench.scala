@@ -112,7 +112,7 @@ object Bench {
     // mean ms over 30 runs after warmup, vs re-planning each call.
     // Guarded: a failure here (e.g. bad SPARK_GRAFT_SF_DIR) must never cost
     // the round its bench JSON.
-    val (cachedMs, uncachedMs, localAggMs, localSortMs, soakQps, soakDistQps) =
+    val (cachedMs, uncachedMs, localAggMs, localSortMs, soakQps, soakDistQps, soakFrozenQps) =
       try {
         val g = graftSession
         graft.Tables.registerAll(spark, sfDir)
@@ -149,7 +149,7 @@ object Bench {
         // completed queries / elapsed — the published q/s row in
         // BASELINE.md. (The correctness twin is GraftSessionSpec's soak,
         // which also diff-checks every iteration's rows.)
-        def soak(sqlText: String): Double = {
+        def soak(call: () => Unit): Double = {
           val threads = 8
           val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
           val done = new java.util.concurrent.atomic.AtomicLong(0)
@@ -157,7 +157,7 @@ object Bench {
           val pool = (1 to threads).map { _ =>
             new Thread(() => {
               while (System.nanoTime() < deadline) {
-                g.sql(sqlText)
+                call()
                 done.incrementAndGet()
               }
             })
@@ -165,24 +165,27 @@ object Bench {
           pool.foreach(_.start()); pool.foreach(_.join())
           done.get() / ((System.nanoTime() - t0) / 1e9)
         }
-        val soakQps = soak(memSql)
+        val soakQps = soak(() => g.sql(memSql))
         // second arm (r13 VERDICT item 5): the same 8-thread soak through a
         // cached DISTRIBUTED query — a real parquet join+agg running Spark
-        // jobs (the reference's DirectExecSuite.scala:227-299 regime), so
-        // the published throughput covers the real-job path, not only the
-        // 1-ms no-job fold. Same plan-cache; concurrency is Spark's
-        // scheduler, not the fold shortcut.
+        // jobs (the reference's DirectExecSuite.scala:227-299 regime). Once
+        // `sql` serves the text's frozen rows, it no longer runs a job, so
+        // this arm runs the text's cached DataFrame from `sqlDF`: each call
+        // re-executes the plan's result stage.
         val distSql =
           """SELECT o_orderpriority, count(*) AS n, sum(o_totalprice) AS s
             |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
             |WHERE c.c_acctbal > 0 GROUP BY 1""".stripMargin
         (1 to 3).foreach(_ => g.sql(distSql))
-        val soakDistQps = soak(distSql)
-        (c, u, la, ls, soakQps, soakDistQps)
+        val soakDistQps = soak(() => g.sqlDF(distSql).collect())
+        // third arm: the same text through `sql`, which returns its frozen
+        // rows with no Spark job
+        val soakFrozenQps = soak(() => g.sql(distSql))
+        (c, u, la, ls, soakQps, soakDistQps, soakFrozenQps)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] facade micro-benchmark FAILED: ${e.getMessage}")
-          (-1.0, -1.0, -1.0, -1.0, -1.0, -1.0)
+          (-1.0, -1.0, -1.0, -1.0, -1.0, -1.0, -1.0)
       }
 
     // Locale.ROOT formatting: f"%.3f" under a comma-decimal locale would
@@ -206,7 +209,7 @@ object Bench {
     // is emitted next to `value` so cross-round total comparisons can't
     // silently span different query sets when `failed` is non-empty.
     val scalarTail =
-      s""""sf":"$sfDir","n_ok":${ok.size},"cold_value":${num(coldTotal, 3)},"cached_query_ms":${num(cachedMs, 1)},"uncached_query_ms":${num(uncachedMs, 1)},"local_agg_ms":${num(localAggMs, 1)},"local_sort_ms":${num(localSortMs, 1)},"soak_qps":${num(soakQps, 1)},"soak_dist_qps":${num(soakDistQps, 1)},"warm_passes":$warmPasses,"failed":$failedJs"""
+      s""""sf":"$sfDir","n_ok":${ok.size},"cold_value":${num(coldTotal, 3)},"cached_query_ms":${num(cachedMs, 1)},"uncached_query_ms":${num(uncachedMs, 1)},"local_agg_ms":${num(localAggMs, 1)},"local_sort_ms":${num(localSortMs, 1)},"soak_qps":${num(soakQps, 1)},"soak_dist_qps":${num(soakDistQps, 1)},"soak_frozen_qps":${num(soakFrozenQps, 1)},"warm_passes":$warmPasses,"failed":$failedJs"""
     val line =
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${js(warm)},$scalarTail}"""
     val namesJs = SparkEntry.longNames.toSeq.sorted

@@ -4,7 +4,7 @@ import java.time.ZoneId
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTimestamp, Expression, LeafExpression, LocalTimestamp, Now, TimeZoneAwareExpression}
+import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTime, CurrentTimestamp, CurrentTimestampLike, Expression, LeafExpression, LocalTimestamp, Now, TimeZoneAwareExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -107,6 +107,18 @@ object ExecTimeRewrite extends Rule[LogicalPlan] {
     case Now() => ExecCurrentTimestamp()
     case cd: CurrentDate => ExecCurrentDate(cd.timeZoneId)
     case lt: LocalTimestamp => ExecLocalTimestamp(lt.timeZoneId)
+  }
+
+  /** True when `e` reads a clock: an `Exec*` expression, or a stock one this
+    * rule does not rewrite (`current_time()`, or any clock on a session
+    * built without GraftExtensions), which the optimizer folds per query.
+    * Either way a cached plan holding one must be planned afresh for each
+    * execution: AQE re-runs a cached executed plan over its materialized
+    * stages, so a clock below an exchange would replay its first value. */
+  def hasClockExpr(e: Expression): Boolean = e.exists {
+    case _: ExecCurrentTimestamp | _: ExecCurrentDate | _: ExecLocalTimestamp => true
+    case _: CurrentTimestampLike | _: CurrentDate | _: LocalTimestamp | _: CurrentTime => true
+    case _ => false
   }
 }
 

@@ -1,11 +1,17 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicLong
+import java.lang.ref.WeakReference
+import java.util.Locale
+import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, View}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.util.SizeEstimator
 
 /** The engine facade: the reference's session API (`sqlDirectly`,
   * `registerTempView`, `tempView`, `executeAndRegisterTempView`,
@@ -13,36 +19,81 @@ import org.apache.spark.sql.types.StructType
   * rebuilt on a stock SparkSession.
   *
   * Design deltas vs the reference, deliberate (SURVEY §7.4):
-  *  - The plan cache stores analyzed `DataFrame`s keyed by
-  *    (catalog-version, sqlText). Re-registering a table bumps the version,
-  *    so stale plans fall out of the key space instead of needing the
-  *    reference's lazy `NamedLocalRelation` rebinding machinery. Within one
-  *    version, repeated SQL skips parse/analyze/optimize/plan entirely.
+  *  - The plan cache is keyed by SQL text, and each entry records the name
+  *    of every relation its analyzed plan resolved (temp views, persistent
+  *    tables and aliases; nested views and subqueries included).
+  *    Re-registering a view drops only the entries that read that name, so
+  *    a view that now shadows a persistent table reaches the plans that read
+  *    the table. This replaces the reference's lazy `NamedLocalRelation`
+  *    rebinding; commands (DDL, INSERT) issued through `sql` still drop
+  *    every entry. A compile that overlaps any write is used once but not
+  *    cached.
+  *  - A text is cached only the second time it is seen, so one-off texts pin
+  *    nothing. A first sighting keeps a weak handle on its DataFrame, which
+  *    the second sighting adopts if it is still alive and no write happened
+  *    since.
+  *  - After an entry's first complete execution, its result rows are frozen
+  *    when running the plan again could not change them: no
+  *    non-deterministic and no clock expression, and the result stage of the
+  *    final plan reads only materialized exchange stages or local tables.
+  *    Later `sql` calls return those rows without a Spark job, and the
+  *    executed plan's broadcast relations and shuffle stages are released;
+  *    `sqlDF` gets a DataFrame over the analyzed plan, built on demand.
+  *    Frozen rows are bounded per entry and in total; a larger result, or a
+  *    plan that fails the test, keeps re-running its executed plan (the AQE
+  *    stages it materialized are reused).
+  *  - At most `MaxHeldPlans` entries hold a DataFrame that may have run: one
+  *    not yet settled, one that re-runs its executed plan, or a frozen
+  *    entry's DataFrame handed out by `sqlDF`. Past the bound, frozen
+  *    entries let go of their DataFrames first, then the least recently used
+  *    of the others are evicted.
   *  - Time correctness under the cache comes from the `Exec*` clock
   *    expressions (see ExecTime.scala) — frozen per execution via local
   *    properties, so concurrent callers on different threads each see their
   *    own clock, mirroring the reference's thread-local
-  *    `DirectExecutionContext` but cluster-safe.
+  *    `DirectExecutionContext` but cluster-safe. A plan holding a clock
+  *    expression caches only its analyzed plan and is planned afresh on
+  *    every call, because AQE would otherwise replay the first call's
+  *    clock from its materialized stages.
   *  - Executions are plain Spark jobs: thread-safe, spill-aware, distributed.
   *    No unbounded build-side memory (the reference's `Long.MaxValue`
   *    `StaticMemoryManager` hash joins are the documented anti-pattern).
   */
 class GraftSession private (val spark: SparkSession) {
+  import GraftSession._
 
-  private val catalogVersion = new AtomicLong(0L)
-  private val maxCacheSize = 1000
+  // The cache state below is guarded by `lock`.
+  private val lock = new Object
 
-  private val planCache =
-    new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size() > maxCacheSize
+  /** Admitted texts, least recently used first. */
+  private val cache =
+    new java.util.LinkedHashMap[String, Entry](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
+        size() > MaxEntries && { drop(e.getValue); counters.evictions.increment(); true }
     }
+
+  /** Texts seen but not (or no longer) cached. */
+  private val seen =
+    new java.util.LinkedHashMap[String, Sighting](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Sighting]): Boolean =
+        size() > MaxSightings
+    }
+
+  /** Writes and commands are numbered, so a compile can tell whether one
+    * overlapped it. */
+  private var writeSeq = 0L
+  private var frozenBytes = 0L
+  /** Cached entries whose `df` is set. */
+  private var heldPlans = 0
+  private val counters = new Counters
 
   /** `db.table` temp-view names, like the reference's directTempViews
     * namespace (reference `DirectSessionCatalog.scala:130-171`), via
     * deterministic name mangling inside the facade. */
   private def mangle(name: String): String = name.replace(".", "__g__")
+
+  /** How the catalog spells a temp view's name (case-insensitive). */
+  private def viewKey(name: String): String = name.toLowerCase(Locale.ROOT)
 
   private def isCommand(df: DataFrame): Boolean = {
     // the parsed plan of e.g. INSERT is an InsertIntoStatement (not yet a
@@ -53,54 +104,204 @@ class GraftSession private (val spark: SparkSession) {
       df.queryExecution.analyzed.isInstanceOf[CommandResult]
   }
 
-  private def cachedPlan(sqlText: String): DataFrame = {
-    val key = s"${catalogVersion.get()}\n$sqlText"
-    val hit = planCache.synchronized(planCache.get(key))
-    if (hit != null) hit
-    else {
-      // compile outside the lock so unrelated statements analyze in
-      // parallel; a racing duplicate compile is harmless (last put wins)
-      val df = spark.sql(sqlText)
+  private def newEntry(sqlText: String, df: DataFrame): Entry = {
+    val analyzed = df.queryExecution.analyzed
+    val nodes = analyzed.collectWithSubqueries { case p => p }
+    // every name the plan resolved, not only temp views: a view registered
+    // later under a persistent table's name shadows it. Extra names (query
+    // aliases) only drop an entry more often.
+    val deps = nodes.collect {
+      case v: View => viewKey(v.desc.identifier.table)
+      case a: SubqueryAlias => viewKey(a.identifier.name)
+    }
+    val clock = nodes.exists(_.expressions.exists(ExecTimeRewrite.hasClockExpr))
+    new Entry(sqlText, analyzed, deps.toSet, clock,
+      nodes.forall(_.expressions.forall(_.deterministic)), if (clock) null else df)
+  }
+
+  /** The DataFrame to run for `sqlText`, and the cache entry behind it
+    * (null when the text is not cached). Compiles outside the lock, so
+    * unrelated statements analyze in parallel. */
+  private def lookup(sqlText: String): Lookup = {
+    var hit: Entry = null
+    var hitDf: DataFrame = null
+    var prior: Sighting = null
+    var reuse: DataFrame = null
+    var start = 0L
+    lock.synchronized {
+      hit = cache.get(sqlText)
+      if (hit != null) hitDf = hit.df
+      else {
+        start = writeSeq
+        prior = seen.get(sqlText)
+        if (prior != null && prior.df != null && prior.compiledAt == writeSeq)
+          reuse = prior.df.get
+      }
+    }
+    if (hit != null) {
+      if (hit.clock) Lookup(hit, DatasetBridge.ofRows(spark, hit.analyzed), Clock)
+      // null for a frozen entry that holds no DataFrame
+      else Lookup(hit, hitDf, Hit)
+    } else {
+      val df = if (reuse != null) reuse else spark.sql(sqlText)
+      val compiledAt = if (reuse != null) prior.compiledAt else start
       if (isCommand(df)) {
         // commands (INSERT/DDL) execute eagerly at construction: caching one
         // would turn a re-issued statement into a silent no-op replay, and a
-        // catalog mutation invalidates every cached SELECT — bump + bypass.
-        bumpVersion()
+        // catalog mutation may change what any cached SELECT reads
+        invalidateAll()
+        Lookup(null, df, Command)
       } else {
-        planCache.synchronized(planCache.put(key, df))
+        val e = newEntry(sqlText, df)
+        val admitted = lock.synchronized {
+          if (prior == null) {
+            seen.put(sqlText, Sighting(new WeakReference(df), compiledAt))
+            false
+          } else if (writeSeq != compiledAt || cache.containsKey(sqlText)) false
+          else {
+            seen.remove(sqlText)
+            cache.put(sqlText, e)
+            if (e.df != null) { heldPlans += 1; trimHeld(e) }
+            true
+          }
+        }
+        // an adopted DataFrame may have run already: a clock plan must not
+        // replay that run's stages
+        val run = if (e.clock && reuse != null) DatasetBridge.ofRows(spark, e.analyzed) else df
+        Lookup(if (admitted) e else null, run, if (prior == null) FirstSighting else Miss)
       }
-      df
     }
   }
 
-  private def bumpVersion(): Unit = {
-    catalogVersion.incrementAndGet()
-    // entries under old versions are unreachable by any future key; drop
-    // them now instead of pinning up to 1000 stale materialized plans
-    planCache.synchronized(planCache.clear())
+  /** Settle a pending entry after a complete execution of `ran`: freeze its
+    * rows, or keep re-running its executed plan. */
+  private def settle(e: Entry, ran: DataFrame, result: DataTable): Unit =
+    if (!e.deterministic) pin(e)
+    else ran.queryExecution.executedPlan match {
+      // another first execution is still re-planning: decide after a later run
+      case a: AdaptiveSparkPlanExec if !a.isFinalPlan => ()
+      case p if replaysFrozenInputs(p) =>
+        val bytes = SizeEstimator.estimate(result.rows)
+        if (bytes <= MaxFrozenEntryBytes) freeze(e, result, bytes) else pin(e)
+      case _ => pin(e)
+    }
+
+  /** Freeze `e`'s rows and let go of its executed plan. */
+  private def freeze(e: Entry, result: DataTable, bytes: Long): Unit = lock.synchronized {
+    if (e.state == Pending && (cache.get(e.text) eq e)) {
+      val it = cache.values.iterator
+      while (frozenBytes + bytes > MaxFrozenBytes && it.hasNext) {
+        val o = it.next()
+        if (o.state == Frozen) { it.remove(); drop(o); counters.evictions.increment() }
+      }
+      e.result = result
+      e.bytes = bytes
+      e.state = Frozen
+      release(e)
+      frozenBytes += bytes
+    }
   }
 
-  /** Parse/analyze/optimize once per (catalog version, SQL text); execute
-    * with a frozen per-execution clock; collect to a DataTable. */
+  private def pin(e: Entry): Unit = lock.synchronized {
+    if (e.state == Pending && (cache.get(e.text) eq e)) e.state = Pinned
+  }
+
+  /** The DataFrame `sqlDF` returns for the frozen entry `e`: the one `e`
+    * holds, or a new one over its analyzed plan, which `e` then holds. */
+  private def lend(e: Entry): DataFrame = {
+    val fresh = DatasetBridge.ofRows(spark, e.analyzed)
+    lock.synchronized {
+      if (e.df == null && (cache.get(e.text) eq e)) {
+        e.df = fresh
+        heldPlans += 1
+        trimHeld(e)
+      }
+      if (e.df != null) e.df else fresh
+    }
+  }
+
+  private def release(e: Entry): Unit =
+    if (e.df != null) { e.df = null; heldPlans -= 1 }
+
+  /** Keep at most `MaxHeldPlans` entries holding a DataFrame, `keep` among
+    * them: frozen entries let go of theirs first (their rows stay), then the
+    * least recently used of the others are evicted. */
+  private def trimHeld(keep: Entry): Unit = {
+    val frozen = cache.values.iterator
+    while (heldPlans > MaxHeldPlans && frozen.hasNext) {
+      val o = frozen.next()
+      if (o.state == Frozen && (o ne keep)) release(o)
+    }
+    val it = cache.values.iterator
+    while (heldPlans > MaxHeldPlans && it.hasNext) {
+      val o = it.next()
+      if (o.df != null && (o ne keep)) { it.remove(); drop(o); counters.evictions.increment() }
+    }
+  }
+
+  /** Account for an entry leaving the cache. Its text stays admitted: the
+    * next call compiles and caches it again. */
+  private def drop(e: Entry): Unit = {
+    if (e.state == Frozen) frozenBytes -= e.bytes
+    release(e)
+    seen.put(e.text, Readmit)
+  }
+
+  /** Drop the entries that read `view`, directly or through another view. */
+  private def invalidate(view: String): Unit = lock.synchronized {
+    writeSeq += 1
+    val it = cache.values.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.deps.contains(view)) { it.remove(); drop(e); counters.invalidated.increment() }
+    }
+  }
+
+  private def invalidateAll(): Unit = lock.synchronized {
+    writeSeq += 1
+    counters.invalidated.add(cache.size)
+    cache.values.asScala.foreach(drop)
+    cache.clear()
+  }
+
+  /** Run `sqlText` with a frozen per-execution clock and collect it: from
+    * frozen rows when the text's entry holds them, else over its cached
+    * plan (parse/analyze/optimize/plan skipped), else compiled afresh. */
   def sql(sqlText: String): DataTable = {
-    val df = cachedPlan(sqlText)
-    GraftExecutionContext.begin(spark)
-    try DataTable(df.schema, df.collect().toSeq)
-    finally GraftExecutionContext.end(spark)
+    val l = lookup(sqlText)
+    val frozen = if (l.entry == null) null else l.entry.result
+    if (frozen != null) { counters.resultHits.increment(); frozen }
+    else {
+      counters.count(l.outcome)
+      GraftExecutionContext.begin(spark)
+      val result =
+        try DataTable(l.df.schema, l.df.collect().toSeq)
+        finally GraftExecutionContext.end(spark)
+      if (l.entry != null && l.entry.state == Pending) settle(l.entry, l.df, result)
+      result
+    }
   }
 
-  /** Lazy variant for composition — same cache, no collect. */
-  def sqlDF(sqlText: String): DataFrame = cachedPlan(sqlText)
-
-  def registerTable(name: String, table: DataTable): Unit = {
-    spark.createDataFrame(table.rows.asJava, table.schema)
-      .createOrReplaceTempView(mangle(name))
-    bumpVersion()
+  /** Lazy variant for composition — same cache, no collect. A frozen
+    * entry returns the DataFrame it holds, or a new unexecuted one over its
+    * analyzed plan; a text with a clock expression gets a new DataFrame over
+    * its cached analyzed plan on every call. */
+  def sqlDF(sqlText: String): DataFrame = {
+    val l = lookup(sqlText)
+    counters.count(l.outcome)
+    if (l.df != null) l.df else lend(l.entry)
   }
+
+  /** Plan-cache counters since the session was built, and its current size. */
+  def cacheStats: CacheStats =
+    lock.synchronized(counters.snapshot(cache.size, heldPlans, frozenBytes))
+
+  def registerTable(name: String, table: DataTable): Unit =
+    registerTable(name, spark.createDataFrame(table.rows.asJava, table.schema))
 
   def registerTable(name: String, df: DataFrame): Unit = {
     df.createOrReplaceTempView(mangle(name))
-    bumpVersion()
+    invalidate(viewKey(mangle(name)))
   }
 
   def table(name: String): DataTable = {
@@ -123,9 +324,12 @@ class GraftSession private (val spark: SparkSession) {
     * method must never do). Checkpointing also severs plan lineage, so the
     * snapshot cannot be re-matched by the CacheManager against later
     * executions of the same SQL — which keeps exec-time clock expressions
-    * in *future* `sql()` calls live rather than frozen to this snapshot. */
+    * in *future* `sql()` calls live rather than frozen to this snapshot.
+    * The text is compiled without touching the plan cache: a snapshot runs
+    * its plan once. */
   def executeAndRegister(sqlText: String, name: String): Long = {
-    val df = cachedPlan(sqlText)
+    val df = spark.sql(sqlText)
+    if (isCommand(df)) invalidateAll()
     GraftExecutionContext.begin(spark)
     val snap =
       try df.localCheckpoint(true)
@@ -138,9 +342,103 @@ class GraftSession private (val spark: SparkSession) {
 
 object GraftSession {
 
+  // Bounds of the plan cache: fixed constants, not options.
+  private val MaxEntries = 1000
+  private val MaxSightings = 1000
+  /** Entries that hold a DataFrame that may have run: each can pin a
+    * broadcast relation and AQE stage state, about 3 MB for a small join. */
+  private val MaxHeldPlans = 8
+  private val MaxFrozenEntryBytes = 1L << 20
+  private val MaxFrozenBytes = 32L << 20
+
+  private sealed trait State
+  /** Not yet settled by a complete run through `sql`. */
+  private case object Pending extends State
+  /** Serves its frozen rows; holds a DataFrame only once `sqlDF` asks. */
+  private case object Frozen extends State
+  /** Re-runs its executed plan. */
+  private case object Pinned extends State
+  /** Holds a clock expression: keeps the analyzed plan only. */
+  private case object Replanned extends State
+
+  /** One cached text. `deps` are the relation names its analyzed plan
+    * resolved, nested views and subqueries included. `df` is the DataFrame
+    * calls run, null for a clock plan and for a frozen entry not lent. */
+  private final class Entry(val text: String, val analyzed: LogicalPlan,
+      val deps: Set[String], val clock: Boolean, val deterministic: Boolean,
+      @volatile var df: DataFrame) {
+    @volatile var state: State = if (clock) Replanned else Pending
+    @volatile var result: DataTable = null
+    var bytes = 0L
+  }
+
+  /** A text seen but not cached: a weak handle on the DataFrame its first
+    * compile built (null once it left the cache), and the write number when
+    * that compile began. */
+  private final case class Sighting(df: WeakReference[DataFrame], compiledAt: Long)
+  private val Readmit = Sighting(null, 0L)
+
+  private sealed trait Outcome
+  private case object Hit extends Outcome
+  private case object Clock extends Outcome
+  private case object Miss extends Outcome
+  private case object FirstSighting extends Outcome
+  private case object Command extends Outcome
+
+  private final case class Lookup(entry: Entry, df: DataFrame, outcome: Outcome)
+
+  /** Plan-cache counters of one facade. Each `sql` or `sqlDF` call counts
+    * once, in one of the first six:
+    *  - `resultHits`: `sql` returned frozen rows, with no Spark job;
+    *  - `planHits`: a cached plan was run, or returned by `sqlDF`;
+    *  - `misses`: compiled on a later sighting and cached, unless a write
+    *    overlapped the compile;
+    *  - `firstSightings`: compiled and not cached, as the text was new;
+    *  - `commands`: a command, run uncached; it drops every entry;
+    *  - `clockReplans`: a cached analyzed plan holding a clock expression,
+    *    optimized and planned afresh.
+    * `invalidated` counts entries dropped by a write to a name they read or
+    * by a command, `evictions` entries dropped by a bound; `entries`,
+    * `heldPlans` (entries holding a DataFrame that may have run) and
+    * `frozenBytes` are the cache's current size. */
+  final case class CacheStats(resultHits: Long, planHits: Long, misses: Long,
+      firstSightings: Long, commands: Long, clockReplans: Long,
+      invalidated: Long, evictions: Long, entries: Int, heldPlans: Int,
+      frozenBytes: Long)
+
+  private final class Counters {
+    val resultHits, planHits, misses, firstSightings, commands, clockReplans,
+      invalidated, evictions = new LongAdder
+
+    def count(o: Outcome): Unit = (o match {
+      case Hit => planHits
+      case Clock => clockReplans
+      case Miss => misses
+      case FirstSighting => firstSightings
+      case Command => commands
+    }).increment()
+
+    def snapshot(entries: Int, heldPlans: Int, frozenBytes: Long): CacheStats = CacheStats(
+      resultHits.sum, planHits.sum, misses.sum, firstSightings.sum, commands.sum,
+      clockReplans.sum, invalidated.sum, evictions.sum, entries, heldPlans, frozenBytes)
+  }
+
+  /** True when running the executed plan `p` again could only repeat its
+    * rows: every input of its result stage is a materialized exchange stage
+    * or a local table. (Applied to deterministic, clock-free plans only.) */
+  private def replaysFrozenInputs(p: SparkPlan): Boolean = p match {
+    case a: AdaptiveSparkPlanExec => a.isFinalPlan && replaysFrozenInputs(a.executedPlan)
+    case r: ResultQueryStageExec => replaysFrozenInputs(r.plan)
+    case s: ExchangeQueryStageExec => s.isMaterialized
+    case _: LocalTableScanExec => true
+    case _ => p.children.nonEmpty &&
+      (p.children ++ p.subqueries).forall(replaysFrozenInputs)
+  }
+
+
   /** One facade per SparkSession: two facades over one session would each
-    * hold an independent catalog-version/plan-cache, so an invalidation in
-    * one would not reach the other's cached plans. */
+    * hold an independent plan cache, so an invalidation in one would not
+    * reach the other's cached plans. */
   private val facades = new java.util.WeakHashMap[SparkSession, GraftSession]()
 
   private def facadeFor(spark: SparkSession): GraftSession = facades.synchronized {

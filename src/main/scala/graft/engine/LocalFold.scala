@@ -31,10 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
   */
 object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
 
-  private def hasClockExpr(e: Expression): Boolean = e.exists {
-    case _: ExecCurrentTimestamp | _: ExecCurrentDate | _: ExecLocalTimestamp => true
-    case _ => false
-  }
+  import ExecTimeRewrite.hasClockExpr
 
   private def foldableExpr(e: Expression): Boolean =
     e.deterministic && !hasClockExpr(e) && !e.exists {

@@ -312,9 +312,19 @@ class GraftSessionSpec extends AnyFunSuite {
           (1 to 20).map(_ => g.sql(q).rows.map(_.toString).sorted.mkString("|"))
       })
     }
+    // once sql() serves the text's frozen rows, the arm above reads a map;
+    // this arm runs the cached DataFrame itself, so every call is Spark jobs
+    val executing = (1 to 8).map { _ =>
+      pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+        override def call(): Seq[String] =
+          (1 to 5).map(_ => g.sqlDF(q).collect().map(_.toString).sorted.mkString("|"))
+      })
+    }
     val results = futures.flatMap(_.get().toSeq)
+    val executed = executing.flatMap(_.get().toSeq)
     pool.shutdown()
     assert(results.forall(_ == expected), "concurrent cached executions diverged")
+    assert(executed.forall(_ == expected), "concurrent executions of the cached DataFrame diverged")
   }
 
   test("commands bypass the plan cache: repeated INSERT executes twice") {
@@ -480,8 +490,9 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(isoExpected != expected, "isolation fixture must differ")
     val deadline = System.nanoTime() + 6L * 1000 * 1000 * 1000
     val iters = new java.util.concurrent.atomic.AtomicLong
+    val execIters = new java.util.concurrent.atomic.AtomicLong
     val bad = new java.util.concurrent.atomic.AtomicLong
-    val pool = Executors.newFixedThreadPool(9)
+    val pool = Executors.newFixedThreadPool(13)
     val tasks = (1 to 8).map { _ =>
       pool.submit(new Runnable {
         override def run(): Unit =
@@ -489,6 +500,17 @@ class GraftSessionSpec extends AnyFunSuite {
             if (g.sql(q).rows.map(_.toString).sorted.mkString("|") != expected)
               bad.incrementAndGet()
             iters.incrementAndGet()
+          }
+      })
+    } ++ (1 to 4).map { _ =>
+      // sql() serves this text's frozen rows after its second call; these
+      // threads re-execute the cached DataFrame, so real jobs are soaked too
+      pool.submit(new Runnable {
+        override def run(): Unit =
+          while (System.nanoTime() < deadline) {
+            if (g.sqlDF(q).collect().map(_.toString).sorted.mkString("|") != expected)
+              bad.incrementAndGet()
+            execIters.incrementAndGet()
           }
       })
     } :+ pool.submit(new Runnable {
@@ -504,5 +526,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(bad.get() == 0, s"${bad.get()} soak iterations diverged")
     assert(iters.get() >= 50,
       s"soak only completed ${iters.get()} iterations — did it run?")
+    assert(execIters.get() >= 20,
+      s"the executing arm only completed ${execIters.get()} iterations — did it run?")
   }
 }
