@@ -127,10 +127,6 @@ object ExecTimeRewrite extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectResolutionRule(_ => ExecTimeRewrite)
-    // replaces the excluded ConvertToLocalRelation with the clock-safe
-    // variant: driver-side local-relation folding (the reference's
-    // no-job fast path) without freezing Exec* clocks into cached plans
-    e.injectOptimizerRule(_ => ClockSafeConvertToLocalRelation)
     // interval-containment theta joins (BETWEEN joins) plan as banded
     // equi-joins instead of nested loops — exact for any band width,
     // plan-gated in RangeJoinRuleSpec
@@ -138,5 +134,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the row_number-over-theta-join AS-OF idiom plans as the one-shuffle
     // union-stream window instead of the pair explosion — AsofRuleSpec
     e.injectOptimizerRule(_ => graft.plans.AsofJoinRule)
+    // replaces the excluded ConvertToLocalRelation with the clock-safe
+    // variant: driver-side local-relation folding (the reference's
+    // no-job fast path) without freezing Exec* clocks into cached plans.
+    // Injected rules run in this order within each optimizer iteration, so
+    // the two join rewrites above see a join of local relations before the
+    // fold's hash join could replace it.
+    e.injectOptimizerRule(_ => ClockSafeConvertToLocalRelation)
   }
 }

@@ -2,14 +2,20 @@ package graft.engine
 
 import java.lang.ref.WeakReference
 import java.util.Locale
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
+
+import scala.collection.immutable.ArraySeq
+import scala.util.control.NonFatal
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, SubqueryAlias, View}
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.util.SizeEstimator
 
@@ -55,9 +61,28 @@ import org.apache.spark.util.SizeEstimator
   *    expression caches only its analyzed plan and is planned afresh on
   *    every call, because AQE would otherwise replay the first call's
   *    clock from its materialized stages.
-  *  - Executions are plain Spark jobs: thread-safe, spill-aware, distributed.
-  *    No unbounded build-side memory (the reference's `Long.MaxValue`
-  *    `StaticMemoryManager` hash joins are the documented anti-pattern).
+  *  - Small file tables registered through `registerTable(name, df)` are
+  *    served from driver snapshots, the reference's `LocalRelation` tables:
+  *    a deterministic, clock-free batch DataFrame whose leaves are all file
+  *    scans by path, that reads no view, and whose optimizer size estimate
+  *    is at most `MaxSnapshotEstimateBytes`. Registration stays job-free;
+  *    the first facade call that reads the table (`sql`, `sqlDF`, `table`,
+  *    `executeAndRegister`) collects its rows once, as `UnsafeRow`s, and
+  *    replaces the live view with a `LocalRelation` over them, unless the
+  *    view was re-registered through the facade meanwhile: the newer
+  *    registration always wins. (A view replaced by a command, through
+  *    `sql` or on the session, is checked for too, but not atomically: a
+  *    command that lands while the snapshot is swapped in is overwritten.)
+  *    The collected rows are bounded per table and per facade
+  *    (`MaxSnapshotBytes`, `MaxSnapshotsBytes`); a table over a bound keeps
+  *    its live view. Reads over snapshots and registered `DataTable`s fold
+  *    to driver-side relations (ClockSafeConvertToLocalRelation, joins
+  *    included) and run no Spark job.
+  *  - Executions of everything else are plain Spark jobs: thread-safe,
+  *    spill-aware, distributed. No unbounded build-side memory (the
+  *    reference's `Long.MaxValue` `StaticMemoryManager` hash joins are the
+  *    documented anti-pattern): a folded join declines past a fixed output
+  *    bound.
   */
 class GraftSession private (val spark: SparkSession) {
   import GraftSession._
@@ -87,6 +112,17 @@ class GraftSession private (val spark: SparkSession) {
   private var heldPlans = 0
   private val counters = new Counters
 
+  /** Registrations whose driver snapshot is not taken yet, by view key. A
+    * registration and a snapshot's swap into the catalog hold `views`, so a
+    * re-registration always wins over an older snapshot. `views` is taken
+    * before `lock`, never after. */
+  private val pending = new ConcurrentHashMap[String, Pending]()
+  private val views = new Object
+  /** Bytes of the snapshots the catalog holds, by view key; guarded by
+    * `views`. */
+  private val snapshots = new java.util.HashMap[String, java.lang.Long]()
+  private var snapshotBytes = 0L
+
   /** `db.table` temp-view names, like the reference's directTempViews
     * namespace (reference `DirectSessionCatalog.scala:130-171`), via
     * deterministic name mangling inside the facade. */
@@ -104,18 +140,21 @@ class GraftSession private (val spark: SparkSession) {
       df.queryExecution.analyzed.isInstanceOf[CommandResult]
   }
 
+  /** Every relation name `plan` resolved, nested views and subqueries
+    * included; not only temp views: a view registered later under a
+    * persistent table's name shadows it. Extra names (query aliases) only
+    * drop an entry more often. */
+  private def relationNames(plan: LogicalPlan): Set[String] =
+    plan.collectWithSubqueries {
+      case v: View => viewKey(v.desc.identifier.table)
+      case a: SubqueryAlias => viewKey(a.identifier.name)
+    }.toSet
+
   private def newEntry(sqlText: String, df: DataFrame): Entry = {
     val analyzed = df.queryExecution.analyzed
     val nodes = analyzed.collectWithSubqueries { case p => p }
-    // every name the plan resolved, not only temp views: a view registered
-    // later under a persistent table's name shadows it. Extra names (query
-    // aliases) only drop an entry more often.
-    val deps = nodes.collect {
-      case v: View => viewKey(v.desc.identifier.table)
-      case a: SubqueryAlias => viewKey(a.identifier.name)
-    }
     val clock = nodes.exists(_.expressions.exists(ExecTimeRewrite.hasClockExpr))
-    new Entry(sqlText, analyzed, deps.toSet, clock,
+    new Entry(sqlText, analyzed, relationNames(analyzed), clock,
       nodes.forall(_.expressions.forall(_.deterministic)), if (clock) null else df)
   }
 
@@ -143,7 +182,9 @@ class GraftSession private (val spark: SparkSession) {
       // null for a frozen entry that holds no DataFrame
       else Lookup(hit, hitDf, Hit)
     } else {
-      val df = if (reuse != null) reuse else spark.sql(sqlText)
+      // taking a snapshot bumps the write number, so a text compiled again
+      // over one is not cached by this call
+      val df = if (reuse != null) reuse else compile(spark.sql(sqlText))
       val compiledAt = if (reuse != null) prior.compiledAt else start
       if (isCommand(df)) {
         // commands (INSERT/DDL) execute eagerly at construction: caching one
@@ -299,14 +340,96 @@ class GraftSession private (val spark: SparkSession) {
   def registerTable(name: String, table: DataTable): Unit =
     registerTable(name, spark.createDataFrame(table.rows.asJava, table.schema))
 
+  /** Register `df` as the temp view `name`. A small file table becomes a
+    * driver snapshot on the first facade read that needs it (see
+    * `snapshotCandidate`); registration itself runs no Spark job. */
   def registerTable(name: String, df: DataFrame): Unit = {
-    df.createOrReplaceTempView(mangle(name))
-    invalidate(viewKey(mangle(name)))
+    val view = mangle(name)
+    val key = viewKey(view)
+    val candidate = snapshotCandidate(df)
+    views.synchronized {
+      df.createOrReplaceTempView(view)
+      val old = snapshots.remove(key)
+      if (old != null) snapshotBytes -= old
+      if (candidate) pending.put(key, new Pending(key, view, df, DatasetBridge.tempView(spark, view).orNull))
+      else pending.remove(key)
+      invalidate(key)
+    }
   }
 
   def table(name: String): DataTable = {
-    val df = spark.table(mangle(name))
+    val df = compile(spark.table(mangle(name)))
     DataTable(df.schema, df.collect().toSeq)
+  }
+
+  /** `build`'s DataFrame. While a query's plan reads a table whose
+    * snapshot is pending, the snapshot is taken and `build` runs again, so
+    * the DataFrame reads the snapshots (or the views that replaced them). A
+    * command is returned as built: it has run already. */
+  private def compile(build: => DataFrame): DataFrame = {
+    var df = build
+    while (!isCommand(df) && takePending(df.queryExecution.analyzed)) df = build
+    df
+  }
+
+  /** True when `df` may be served from a driver snapshot instead of a live
+    * view: a deterministic, clock-free batch plan of this session whose
+    * every leaf is a scan of files by path (no catalog table, which a
+    * command could change; no view, so a view it reads stays live and a
+    * write to that view still reaches the plans that read `df`), with an
+    * optimizer size estimate at most `MaxSnapshotEstimateBytes`. */
+  private def snapshotCandidate(df: DataFrame): Boolean = {
+    val nodes = df.queryExecution.analyzed.collectWithSubqueries { case p => p }
+    (df.sparkSession eq spark) && !df.isStreaming &&
+      nodes.forall {
+        case _: View => false
+        case l: LogicalRelation =>
+          l.catalogTable.isEmpty && l.relation.isInstanceOf[HadoopFsRelation]
+        case p => p.children.nonEmpty
+      } &&
+      nodes.forall(_.expressions.forall(e => e.deterministic && !ExecTimeRewrite.hasClockExpr(e))) &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= MaxSnapshotEstimateBytes
+  }
+
+  /** Take the pending snapshots of the relations `plan` reads; true when
+    * there was one, so `plan` may have read a view that has since changed. */
+  private def takePending(plan: LogicalPlan): Boolean =
+    !pending.isEmpty && {
+      val ps = relationNames(plan).toSeq.flatMap(n => Option(pending.get(n)))
+      ps.foreach(takeSnapshot)
+      ps.nonEmpty
+    }
+
+  /** Collect `p`'s rows, at most once, and put them in the catalog in place
+    * of its live view, unless the view was replaced meanwhile or the rows
+    * are over the bounds (checked on the collected rows: the file size
+    * understates their heap size 8–17×); either way `p` is no longer
+    * pending. A re-registration through the facade holds `views`, so it
+    * always wins; a command that replaces the view between the check and
+    * the swap is overwritten. Swapping bumps the write number, so a compile
+    * that overlapped it is not cached. */
+  private def takeSnapshot(p: Pending): Unit = p.synchronized {
+    def current = (pending.get(p.key) eq p) &&
+      DatasetBridge.tempView(spark, p.view).exists(_ eq p.registered)
+    if (pending.get(p.key) eq p) {
+      val rows =
+        try { if (current) DatasetBridge.collectInternal(p.df) else null }
+        catch { case NonFatal(e) => pending.remove(p.key, p); throw e }
+      val bytes = if (rows == null) 0L else SizeEstimator.estimate(rows)
+      views.synchronized {
+        if (rows != null && current && bytes <= MaxSnapshotBytes &&
+            snapshotBytes + bytes <= MaxSnapshotsBytes) {
+          val attrs = p.df.queryExecution.analyzed.output
+            .map(a => AttributeReference(a.name, a.dataType, a.nullable, a.metadata)())
+          DatasetBridge.ofRows(spark, LocalRelation(attrs, ArraySeq.unsafeWrapArray(rows)))
+            .createOrReplaceTempView(p.view)
+          snapshots.put(p.key, bytes)
+          snapshotBytes += bytes
+          invalidate(p.key)
+        }
+        pending.remove(p.key, p)
+      }
+    }
   }
 
   /** Isolated child session: shares SparkContext + catalog-level state,
@@ -326,9 +449,9 @@ class GraftSession private (val spark: SparkSession) {
     * executions of the same SQL — which keeps exec-time clock expressions
     * in *future* `sql()` calls live rather than frozen to this snapshot.
     * The text is compiled without touching the plan cache: a snapshot runs
-    * its plan once. */
+    * its plan once, over the driver snapshots of the tables it reads. */
   def executeAndRegister(sqlText: String, name: String): Long = {
-    val df = spark.sql(sqlText)
+    val df = compile(spark.sql(sqlText))
     if (isCommand(df)) invalidateAll()
     GraftExecutionContext.begin(spark)
     val snap =
@@ -350,6 +473,14 @@ object GraftSession {
   private val MaxHeldPlans = 8
   private val MaxFrozenEntryBytes = 1L << 20
   private val MaxFrozenBytes = 32L << 20
+  // Bounds of the driver snapshots of registered tables, per table and per
+  // facade, on the collected rows.
+  private val MaxSnapshotBytes = 16L << 20
+  private val MaxSnapshotsBytes = 64L << 20
+  /** The optimizer size estimate (file bytes) past which a table is not
+    * collected at all: parquet rows measured 8–17× larger on the heap, so a
+    * larger file would pass `MaxSnapshotBytes` anyway. */
+  private val MaxSnapshotEstimateBytes = MaxSnapshotBytes / 8
 
   private sealed trait State
   /** Not yet settled by a complete run through `sql`. */
@@ -386,6 +517,12 @@ object GraftSession {
   private case object Command extends Outcome
 
   private final case class Lookup(entry: Entry, df: DataFrame, outcome: Outcome)
+
+  /** A registration of `df` as the temp view `view` (key `key`) whose
+    * snapshot is not taken yet; `registered` is the catalog's definition of
+    * the view that the registration created. */
+  private final class Pending(val key: String, val view: String, val df: DataFrame,
+      val registered: AnyRef)
 
   /** Plan-cache counters of one facade. Each `sql` or `sqlDF` call counts
     * once, in one of the first six:
@@ -438,12 +575,16 @@ object GraftSession {
 
   /** One facade per SparkSession: two facades over one session would each
     * hold an independent plan cache, so an invalidation in one would not
-    * reach the other's cached plans. */
-  private val facades = new java.util.WeakHashMap[SparkSession, GraftSession]()
+    * reach the other's cached plans. Both sides are weak, since a facade
+    * holds its session: a session that nobody references is collected with
+    * its facade, and a facade that nobody references is replaced by a new
+    * one on the next request. */
+  private val facades = new java.util.WeakHashMap[SparkSession, WeakReference[GraftSession]]()
 
   private def facadeFor(spark: SparkSession): GraftSession = facades.synchronized {
-    var f = facades.get(spark)
-    if (f == null) { f = new GraftSession(spark); facades.put(spark, f) }
+    val held = facades.get(spark)
+    var f = if (held == null) null else held.get
+    if (f == null) { f = new GraftSession(spark); facades.put(spark, new WeakReference(f)) }
     f
   }
 

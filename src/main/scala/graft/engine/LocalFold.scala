@@ -1,10 +1,17 @@
 package graft.engine
 
+import java.util.concurrent.atomic.LongAdder
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, InterpretedOrdering, AttributeSet, Expression, If, IntegerLiteral, InterpretedMutableProjection, IsNaN, JoinedRow, Literal, Predicate, SpecificInternalRow, Unevaluable, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, If, IntegerLiteral, InterpretedMutableProjection, InterpretedOrdering, InterpretedUnsafeProjection, IsNaN, JoinedRow, Literal, Predicate, SpecificInternalRow, Unevaluable, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, DeclarativeAggregate}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Limit, LocalRelation, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Limit, LocalRelation, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, MapType, StructType}
 
 /** Clock-safe driver-side folding of local-relation plans.
@@ -18,8 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
   * executes entirely on the calling thread; collect over a plan that
   * optimizes to a bare `LocalRelation` never submits a Spark job). This rule
   * restores that path with the one guard the stock rule lacks: a
-  * Project/Filter/Limit/Sort (and, below, small Aggregate) over a
-  * LocalRelation folds eagerly ONLY when its expressions are deterministic
+  * Project/Filter/Limit/Sort (and, below, small Aggregate and equi-Join) over
+  * LocalRelations folds eagerly ONLY when its expressions are deterministic
   * and contain no execution-clock expression — those plans keep their live
   * per-execution semantics under the plan cache.
   *
@@ -28,6 +35,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
   * observable under a cached plan — rand() would return identical values on
   * every re-execution. Skipping those keeps cached-plan re-execution
   * semantics identical to uncached.)
+  *
+  * Joins of two LocalRelations fold with a driver-side hash join (inner,
+  * left/right outer, left semi and left anti, with an optional extra
+  * condition), so a facade query over the driver snapshots of small
+  * registered tables (GraftSession) runs no Spark job at all.
+  *
+  * Every fold evaluates interpreted (`InterpretedMutableProjection`,
+  * `InterpretedUnsafeProjection`, `Predicate.createInterpreted`): generated
+  * code inlines literals, so an ad-hoc text with a new literal would pay a
+  * Janino compile on every call, while the folded inputs are small enough
+  * that interpretation costs less.
   */
 object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
 
@@ -50,7 +68,7 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
       LocalRelation(l.output, l.data.take(limit), l.isStreaming)
 
     case Filter(condition, l: LocalRelation) if foldableExpr(condition) =>
-      val predicate = Predicate.create(condition, l.output)
+      val predicate = Predicate.createInterpreted(BindReferences.bindReference(condition, l.output))
       predicate.initialize(0)
       LocalRelation(l.output, l.data.filter(row => predicate.eval(row)), l.isStreaming)
 
@@ -69,7 +87,45 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
         !agg.child.asInstanceOf[LocalRelation].isStreaming &&
         (agg.groupingExpressions ++ agg.aggregateExpressions).forall(foldableAggExpr) =>
       foldAggregate(agg, agg.child.asInstanceOf[LocalRelation]).getOrElse(agg)
+
+    case j @ Join(l: LocalRelation, r: LocalRelation, _, _, _)
+        if !l.isStreaming && !r.isStreaming =>
+      foldJoin(j, l, r).getOrElse(j)
   }
+
+  /** A join whose output rows would take more heap than this stays a Spark
+    * join. */
+  private val MaxJoinOutputBytes = 16L << 20
+  /** Heap bytes of an UnsafeRow beyond its data: the row object and its
+    * byte array's header (64-bit JVM, compressed oops). */
+  private val RowOverheadBytes = 56
+
+  /** Output rows the join fold has built since the JVM started; a declined
+    * join builds none. */
+  private[graft] val joinRowsBuilt = new LongAdder
+
+  /** A build-side row of the join fold and the variable-length bytes it adds
+    * to an output UnsafeRow. */
+  private final case class Built(row: InternalRow, varBytes: Int)
+
+  /** The bytes past the fixed portion of `side`'s rows as UnsafeRows: what
+    * a row's strings, binaries and nested values add to a joined row. */
+  private def varBytes(side: LocalRelation): InternalRow => Int =
+    if (side.output.forall(a => UnsafeRow.isFixedLength(a.dataType))) _ => 0
+    else {
+      val fixed = fixedBytes(side.output.size)
+      // nullable throughout: the row of nulls an outer join pads with is sized too
+      val asUnsafe = InterpretedUnsafeProjection.createProjection(
+        side.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, nullable = true) })
+      (row: InternalRow) => row match {
+        case u: UnsafeRow => u.getSizeInBytes - fixed
+        case _ => asUnsafe(row).getSizeInBytes - fixed
+      }
+    }
+
+  /** The bytes of an UnsafeRow of `n` fields before its variable-length
+    * data: the null bit set and one word per field. */
+  private def fixedBytes(n: Int): Int = UnsafeRow.calculateBitSetWidthInBytes(n) + 8 * n
 
   /** Like foldableExpr but transparent to (well-behaved) aggregate calls:
     * the AggregateExpression node and its DeclarativeAggregate function are
@@ -98,6 +154,22 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     case _ => false
   }
 
+  /** `e` as a hash key whose UnsafeRow bytes are equal exactly when Spark's
+    * distributed operators treat the values as equal. This rule runs
+    * (injected) before the optimizer's NormalizeFloatingNumbers batch, so
+    * raw bytes would keep -0.0 apart from 0.0 and differing NaN bit patterns
+    * apart where the distributed path unifies them: top-level float/double
+    * keys are normalized exactly as Spark's NormalizeNaNAndZero does
+    * (canonical NaN; `x + 0.0` maps -0.0 to 0.0). None — the fold declines —
+    * for a float nested inside a struct/array/map key and for a string
+    * collation whose equality is not byte equality. */
+  private def hashKey(e: Expression): Option[Expression] = e.dataType match {
+    case DoubleType => Some(If(IsNaN(e), Literal(Double.NaN), Add(e, Literal(0.0d))))
+    case FloatType => Some(If(IsNaN(e), Literal(Float.NaN), Add(e, Literal(0.0f))))
+    case dt if hasNestedFloat(dt) || !UnsafeRowUtils.isBinaryStable(dt) => None
+    case _ => Some(e)
+  }
+
   /** Driver-side hash aggregation over an already-driver-resident
     * LocalRelation — the reference's `testAgg` regime: a small cached
     * aggregate answered in ms with no Spark job. Interpreted evaluation of
@@ -111,22 +183,9 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     val grouping = agg.groupingExpressions
     val results = agg.aggregateExpressions
 
-    // This rule runs (injected) before the optimizer's
-    // NormalizeFloatingNumbers batch, and the fold groups on raw UnsafeRow
-    // key bytes — so -0.0 vs 0.0 and differing NaN bit patterns would land
-    // in separate groups while the distributed path unifies them. Normalize
-    // top-level float/double keys exactly as Spark's NormalizeNaNAndZero
-    // does (canonical NaN; `x + 0.0` maps -0.0 to 0.0 — the normalized
-    // value is also what the distributed path emits as the group key), and
-    // bail on floats nested inside struct/array/map keys.
-    val normGrouping = grouping.map { e =>
-      e.dataType match {
-        case DoubleType => If(IsNaN(e), Literal(Double.NaN), Add(e, Literal(0.0d)))
-        case FloatType => If(IsNaN(e), Literal(Float.NaN), Add(e, Literal(0.0f)))
-        case dt if hasNestedFloat(dt) => return None
-        case _ => e
-      }
-    }
+    // groups on the UnsafeRow bytes of the normalized keys; the normalized
+    // value is also what the distributed path emits as the group key
+    val normGrouping = grouping.map(e => hashKey(e).getOrElse(return None))
 
     // distinct-by-semantics aggregate calls, in first-appearance order
     val aggCalls = {
@@ -158,7 +217,8 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     if (!finalExprs.forall(_.references.subsetOf(AttributeSet(keyAttrs ++ bufferAttrs))))
       return None
 
-    val keyProj = UnsafeProjection.create(normGrouping, l.output)
+    val keyProj = InterpretedUnsafeProjection.createProjection(
+      BindReferences.bindReferences(normGrouping, l.output))
     val initProj = new InterpretedMutableProjection(funcs.flatMap(_.initialValues), Nil)
     val updateProj = new InterpretedMutableProjection(
       funcs.flatMap(_.updateExpressions), bufferAttrs ++ l.output)
@@ -182,5 +242,98 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
       finalProj(joined(key, buf)).copy()
     }.toSeq
     Some(LocalRelation(results.map(_.toAttribute), out, l.isStreaming))
+  }
+
+  /** Driver-side hash join of two LocalRelations on their equi-join keys:
+    * a hash table over one side, keyed on the UnsafeRow bytes of its
+    * `hashKey`-normalized keys, probed by the other — the left side, or the
+    * right side for a right outer join. A key with a null field matches
+    * nothing, as in Spark's hash joins (`<=>` keys arrive as never-null
+    * `coalesce`/`isnull` pairs); the extra condition is evaluated on each
+    * key match. Returns None (plan unchanged, a Spark join) for a join that
+    * is not an equi-join of type inner, left/right outer, left semi or left
+    * anti, for keys `hashKey` declines, and when the output rows pass
+    * `MaxJoinOutputBytes`. */
+  private def foldJoin(j: Join, l: LocalRelation, r: LocalRelation): Option[LocalRelation] = {
+    val (joinType, leftKeys, rightKeys, extra) = j match {
+      case ExtractEquiJoinKeys(t, lk, rk, c, _, _, _, _)
+          if (lk ++ rk ++ c).forall(foldableExpr) => (t, lk, rk, c)
+      case _ => return None
+    }
+    val probeLeft = joinType match {
+      case _: InnerLike | LeftOuter | LeftSemi | LeftAnti => true
+      case RightOuter => false
+      case _ => return None
+    }
+    val (probe, build) = if (probeLeft) (l, r) else (r, l)
+    val normalized = (leftKeys ++ rightKeys).map(k => hashKey(k).getOrElse(return None))
+    val (leftKey, rightKey) = normalized.splitAt(leftKeys.size)
+    def keyProjection(keys: Seq[Expression], side: LocalRelation): UnsafeProjection =
+      InterpretedUnsafeProjection.createProjection(BindReferences.bindReferences(keys, side.output))
+    val buildKey = keyProjection(if (probeLeft) rightKey else leftKey, build)
+    val probeKey = keyProjection(if (probeLeft) leftKey else rightKey, probe)
+
+    val projects = joinType != LeftSemi && joinType != LeftAnti
+    val buildVar = if (projects) varBytes(build) else (_: InternalRow) => 0
+    val table = mutable.HashMap[UnsafeRow, mutable.ArrayBuffer[Built]]()
+    build.data.foreach { row =>
+      val k = buildKey(row)
+      if (!k.anyNull) table.getOrElseUpdate(k.copy(), mutable.ArrayBuffer()) += Built(row, buildVar(row))
+    }
+    def matches(row: InternalRow): collection.Seq[Built] = {
+      val k = probeKey(row)
+      if (k.anyNull) Nil else table.getOrElse(k, Nil)
+    }
+
+    val condition = extra.map { c =>
+      val p = Predicate.createInterpreted(BindReferences.bindReference(c, l.output ++ r.output))
+      p.initialize(0)
+      p
+    }
+    val joined = new JoinedRow
+    /** A probe row and a build row as (left, right). */
+    def pair(p: InternalRow, b: InternalRow): InternalRow =
+      if (probeLeft) joined(p, b) else joined(b, p)
+    def passes(p: InternalRow, b: Built): Boolean = condition.forall(_.eval(pair(p, b.row)))
+
+    val out: Seq[InternalRow] =
+      if (joinType == LeftSemi) probe.data.filter(p => matches(p).exists(passes(p, _)))
+      else if (joinType == LeftAnti) probe.data.filterNot(p => matches(p).exists(passes(p, _)))
+      else {
+        val outer = joinType == LeftOuter || joinType == RightOuter
+        /** Each output pair, in order: a probe row and a build row that
+          * passes, or null for an outer join's unmatched probe row; stops
+          * before the next probe row once `stop` holds. */
+        def pairs(stop: => Boolean)(emit: (InternalRow, Built) => Unit): Unit =
+          probe.data.iterator.takeWhile(_ => !stop).foreach { p =>
+            var hit = false
+            matches(p).foreach(b => if (passes(p, b)) { hit = true; emit(p, b) })
+            if (outer && !hit) emit(p, null)
+          }
+        // sum the output rows' heap bytes before building any: an output
+        // UnsafeRow holds the fixed portion of the joined schema plus the
+        // variable-length bytes of its two input rows, so a declined join
+        // costs a pass over its key matches, not its rows
+        val fixed = fixedBytes(j.output.size) + RowOverheadBytes
+        val nulls = new GenericInternalRow(build.output.size)
+        val nullVar = buildVar(nulls)
+        val probeVar = varBytes(probe)
+        var last: InternalRow = null
+        var lastVar = 0
+        var bytes = 0L
+        pairs(bytes > MaxJoinOutputBytes) { (p, b) =>
+          if (p ne last) { last = p; lastVar = probeVar(p) }
+          bytes += fixed + lastVar + (if (b == null) nullVar else b.varBytes)
+        }
+        if (bytes > MaxJoinOutputBytes) return None
+        // the output's nullability: the outer side's columns are nullable
+        val project = InterpretedUnsafeProjection.createProjection(
+          j.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
+        val rows = mutable.ArrayBuffer[InternalRow]()
+        pairs(false)((p, b) => rows += project(pair(p, if (b == null) nulls else b.row)).copy())
+        joinRowsBuilt.add(rows.size)
+        rows.toIndexedSeq
+      }
+    Some(LocalRelation(j.output, out, l.isStreaming))
   }
 }

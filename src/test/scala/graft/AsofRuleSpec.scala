@@ -2,9 +2,11 @@ package graft
 
 import graft.plans.AsofJoinRule
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Join, Union => LUnion, Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, Union => LUnion, Window => LWindow}
 import org.apache.spark.sql.catalyst.expressions.RowNumber
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** AsofJoinRule: the row_number-over-theta-join AS-OF idiom must rewrite to
   * the union-stream window with results IDENTICAL to the stock plan — per
@@ -15,12 +17,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape, and every non-as-of lookalike must be left untouched. */
 class AsofRuleSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // a session of its own, without GraftExtensions (which another suite's
+    // session in the same JVM may carry): attach/detach then switch the rule
+    // on and off, and no other rule rewrites the idiom's join
+    val s = keepingSessions(SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .create())
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // probes: duplicate full tuple (k=a,pid=1 twice), null key, null time,
@@ -45,6 +50,18 @@ class AsofRuleSpec extends AnyFunSuite {
       Row("a", 18L, null, 8.5),
       Row("z", 19L, 1L, 9.5)), qSchema).createOrReplaceTempView("aq")
     s
+  }
+
+  /** `create`'s session, leaving the JVM's default and active sessions as
+    * they were. */
+  private def keepingSessions(create: => SparkSession): SparkSession = {
+    val default = SparkSession.getDefaultSession
+    val active = SparkSession.getActiveSession
+    try create
+    finally {
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
   }
 
   private def attach(): Unit =
@@ -207,6 +224,33 @@ class AsofRuleSpec extends AnyFunSuite {
       val got = spark.sql(sql.replace("FROM ap p", "FROM ap2 p"))
         .collect().map(_.toString).sorted.toSeq
       assert(got == base, s"n=$n differs")
+    }
+  }
+
+  test("local inputs on a session with GraftExtensions: the rewrite fires before the join fold") {
+    // GraftExtensions also folds a join of two local relations on the
+    // driver; the as-of rewrite must see the idiom's join first, or the
+    // pair explosion is built on the driver and still ranked by a window
+    val g = keepingSessions(SparkSession.builder()
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      .withExtensions(new graft.engine.GraftExtensions)
+      .create())
+    Seq("ap", "aq").foreach { t =>
+      val df = spark.table(t)
+      g.createDataFrame(df.collect().toList.asJava, df.schema).createOrReplaceTempView(t)
+      assert(g.table(t).queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    }
+    detach()
+    for ((join, ineq, order) <- Seq(("LEFT JOIN", "<=", "q.qt DESC, q.qid DESC"),
+        ("JOIN", ">", "q.qt ASC, q.qid ASC"))) {
+      val sql = idiom(join, ineq, order)
+      val dfOn = g.sql(sql)
+      val plan = dfOn.queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join => j }.isEmpty, s"expected join-free as-of rewrite:\n$plan")
+      assert(plan.collect { case u: LUnion => u }.nonEmpty, s"no union stream:\n$plan")
+      val off = spark.sql(sql).collect().map(_.toString).sorted.toSeq
+      assert(dfOn.collect().map(_.toString).sorted.toSeq == off && off.nonEmpty)
     }
   }
 }

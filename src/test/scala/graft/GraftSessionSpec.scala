@@ -27,7 +27,39 @@ class GraftSessionSpec extends AnyFunSuite {
       Row("a", 2, 0), Row("bbb", 2, 1), Row("c", 3, 0), Row("ddd", 4, 1), Row("e", 5, 1))))
     s.registerTable("people2", DataTable(schema, Seq(
       Row("a", 1, 0), Row("b", 2, 1), Row("c", 3, 0))))
+    // the rows of people2, computed from `range`: a join of two DataTables
+    // (driver-resident LocalRelations) folds on the driver and runs no Spark
+    // job, while a join with this one plans a real join
+    s.registerTable("people2_live", s.spark.range(3).selectExpr("char(97 + id) AS name",
+      "CAST(id + 1 AS INT) AS age", "CAST(id % 2 AS INT) AS genda"))
     s
+  }
+
+  /** The local property that marks the jobs of the executing arms below. */
+  private val ArmKey = "graft.test.arm"
+
+  /** Spark jobs started while `body` runs from threads whose local
+    * property `ArmKey` is set, and the value of `body`. */
+  private def armJobs[T](body: => T): (Int, T) = {
+    val sc = g.spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(ArmKey) != null)) { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      val v = body
+      org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
+      (jobs.get(), v)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `call` with the local property `ArmKey` set on this thread. */
+  private def inArm[T](call: => T): T = {
+    g.spark.sparkContext.setLocalProperty(ArmKey, "exec")
+    try call finally g.spark.sparkContext.setLocalProperty(ArmKey, null)
   }
 
   private def viewName(n: String) = n // registered unqualified below
@@ -303,7 +335,7 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("concurrent execution of one cached plan is correct (reference testMultiThread)") {
-    val q = "SELECT t1.age, count(*) AS n FROM people t1 JOIN people2 t2 ON t1.name = t2.name GROUP BY t1.age"
+    val q = "SELECT t1.age, count(*) AS n FROM people t1 JOIN people2_live t2 ON t1.name = t2.name GROUP BY t1.age"
     val expected = g.spark.sql(q).collect().map(_.toString).sorted.mkString("|")
     val pool = Executors.newFixedThreadPool(8)
     val futures = (1 to 8).map { _ =>
@@ -314,17 +346,20 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     // once sql() serves the text's frozen rows, the arm above reads a map;
     // this arm runs the cached DataFrame itself, so every call is Spark jobs
-    val executing = (1 to 8).map { _ =>
-      pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-        override def call(): Seq[String] =
-          (1 to 5).map(_ => g.sqlDF(q).collect().map(_.toString).sorted.mkString("|"))
-      })
+    val (jobs, executed) = armJobs {
+      val executing = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          override def call(): Seq[String] = inArm(
+            (1 to 5).map(_ => g.sqlDF(q).collect().map(_.toString).sorted.mkString("|")))
+        })
+      }
+      executing.flatMap(_.get().toSeq)
     }
     val results = futures.flatMap(_.get().toSeq)
-    val executed = executing.flatMap(_.get().toSeq)
     pool.shutdown()
     assert(results.forall(_ == expected), "concurrent cached executions diverged")
     assert(executed.forall(_ == expected), "concurrent executions of the cached DataFrame diverged")
+    assert(jobs >= executed.size, s"${executed.size} executions of the cached DataFrame ran $jobs Spark jobs")
   }
 
   test("commands bypass the plan cache: repeated INSERT executes twice") {
@@ -479,13 +514,14 @@ class GraftSessionSpec extends AnyFunSuite {
     // the plan-cache's concurrent reuse is what is being soaked. A sibling
     // newSession() runs the SAME query text against DIFFERENT data
     // throughout, proving cached-plan isolation under sustained load.
-    val q = "SELECT t1.age, count(*) AS n FROM people t1 JOIN people2 t2 ON t1.name = t2.name GROUP BY t1.age"
+    val q = "SELECT t1.age, count(*) AS n FROM people t1 JOIN people2_live t2 ON t1.name = t2.name GROUP BY t1.age"
     val expected = g.spark.sql(q).collect().map(_.toString).sorted.mkString("|")
     val iso = g.newSession()
     val schema = StructType(Seq(StructField("name", StringType),
       StructField("age", IntegerType), StructField("genda", IntegerType)))
     iso.registerTable("people", DataTable(schema, Seq(Row("z", 99, 0))))
-    iso.registerTable("people2", DataTable(schema, Seq(Row("z", 1, 1))))
+    iso.registerTable("people2_live", iso.spark.range(1).selectExpr("'z' AS name",
+      "1 AS age", "1 AS genda"))
     val isoExpected = iso.spark.sql(q).collect().map(_.toString).sorted.mkString("|")
     assert(isoExpected != expected, "isolation fixture must differ")
     val deadline = System.nanoTime() + 6L * 1000 * 1000 * 1000
@@ -493,40 +529,45 @@ class GraftSessionSpec extends AnyFunSuite {
     val execIters = new java.util.concurrent.atomic.AtomicLong
     val bad = new java.util.concurrent.atomic.AtomicLong
     val pool = Executors.newFixedThreadPool(13)
-    val tasks = (1 to 8).map { _ =>
-      pool.submit(new Runnable {
+    val (jobs, _) = armJobs {
+      val tasks = (1 to 8).map { _ =>
+        pool.submit(new Runnable {
+          override def run(): Unit =
+            while (System.nanoTime() < deadline) {
+              if (g.sql(q).rows.map(_.toString).sorted.mkString("|") != expected)
+                bad.incrementAndGet()
+              iters.incrementAndGet()
+            }
+        })
+      } ++ (1 to 4).map { _ =>
+        // sql() serves this text's frozen rows after its second call; these
+        // threads re-execute the cached DataFrame, so real jobs are soaked too
+        pool.submit(new Runnable {
+          override def run(): Unit = inArm {
+            while (System.nanoTime() < deadline) {
+              if (g.sqlDF(q).collect().map(_.toString).sorted.mkString("|") != expected)
+                bad.incrementAndGet()
+              execIters.incrementAndGet()
+            }
+          }
+        })
+      } :+ pool.submit(new Runnable {
         override def run(): Unit =
           while (System.nanoTime() < deadline) {
-            if (g.sql(q).rows.map(_.toString).sorted.mkString("|") != expected)
+            if (iso.sql(q).rows.map(_.toString).sorted.mkString("|") != isoExpected)
               bad.incrementAndGet()
             iters.incrementAndGet()
           }
       })
-    } ++ (1 to 4).map { _ =>
-      // sql() serves this text's frozen rows after its second call; these
-      // threads re-execute the cached DataFrame, so real jobs are soaked too
-      pool.submit(new Runnable {
-        override def run(): Unit =
-          while (System.nanoTime() < deadline) {
-            if (g.sqlDF(q).collect().map(_.toString).sorted.mkString("|") != expected)
-              bad.incrementAndGet()
-            execIters.incrementAndGet()
-          }
-      })
-    } :+ pool.submit(new Runnable {
-      override def run(): Unit =
-        while (System.nanoTime() < deadline) {
-          if (iso.sql(q).rows.map(_.toString).sorted.mkString("|") != isoExpected)
-            bad.incrementAndGet()
-          iters.incrementAndGet()
-        }
-    })
-    tasks.foreach(_.get())
+      tasks.foreach(_.get())
+    }
     pool.shutdown()
     assert(bad.get() == 0, s"${bad.get()} soak iterations diverged")
     assert(iters.get() >= 50,
       s"soak only completed ${iters.get()} iterations — did it run?")
     assert(execIters.get() >= 20,
       s"the executing arm only completed ${execIters.get()} iterations — did it run?")
+    assert(jobs >= execIters.get(),
+      s"${execIters.get()} executions of the cached DataFrame ran $jobs Spark jobs")
   }
 }

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.LeafExpression
@@ -30,8 +30,14 @@ class PlanCacheSpec extends AnyFunSuite {
 
   private val kv = StructType(Seq(StructField("k", IntegerType), StructField("v", LongType)))
 
-  /** `n` rows (i % 10, i * scale) for i in 1..n. */
-  private def table(n: Int, scale: Long = 1L): DataTable =
+  /** `n` rows (i % 10, i * scale) for i in 1..n, computed from `range`: a
+    * join of two `DataTable`s (driver-resident LocalRelations) folds on the
+    * driver and runs no Spark job, while these plan real joins. */
+  private def table(g: GraftSession, n: Int, scale: Long = 1L): DataFrame =
+    g.spark.range(1, n + 1).selectExpr("CAST(id % 10 AS INT) AS k", s"id * $scale AS v")
+
+  /** The rows of `table` as a `DataTable`, whose plans run on the driver. */
+  private def local(n: Int, scale: Long = 1L): DataTable =
     DataTable(kv, (1 to n).map(i => Row(i % 10, i * scale)))
 
   /** A self-join and aggregate over `t`: a broadcast join below a shuffle,
@@ -61,7 +67,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("a cached plan with a clock below an exchange reads the clock afresh on every call") {
     val g = root.newSession()
-    g.registerTable("mem_t", table(20))
+    g.registerTable("mem_t", table(g, 20))
     val q = "SELECT k % 2 AS p, max(current_timestamp()) AS ts FROM mem_t GROUP BY k % 2"
     def ts(): java.sql.Timestamp = g.sql(q).rows.map(_.getTimestamp(1)).maxBy(_.getTime)
     val t1 = ts()
@@ -86,7 +92,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("a seeded non-deterministic plan keeps re-running its executed plan and is never frozen") {
     val g = root.newSession()
-    g.registerTable("mem_t", table(20))
+    g.registerTable("mem_t", table(g, 20))
     val q = "SELECT a.k, a.v, rand(7) AS r FROM mem_t a JOIN mem_t b ON a.k = b.k"
     val runs = (1 to 4).map(_ => sorted(g.sql(q)))
     assert(runs.distinct.size == 1, "a cached rand(7) plan changed its values")
@@ -96,8 +102,8 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("reads see every write published before they began while a writer re-registers views") {
     val g = root.newSession()
-    g.registerTable("ind_t", table(50))
-    g.registerTable("dep_t", table(50, 1L))
+    g.registerTable("ind_t", table(g, 50))
+    g.registerTable("dep_t", table(g, 50, 1L))
     val depTexts = Seq(joinSql("dep_t"), joinSql("dep_t", 2))
     val indTexts = Seq(joinSql("ind_t"), joinSql("ind_t", 3))
     val indWant = indTexts.map(direct(g, _))
@@ -135,7 +141,7 @@ class PlanCacheSpec extends AnyFunSuite {
     val writer = pool.submit(new Runnable {
       override def run(): Unit = {
         (2 to versions).foreach { n =>
-          g.registerTable("dep_t", table(50, n.toLong))
+          g.registerTable("dep_t", table(g, 50, n.toLong))
           published.set(n.toLong)
           Thread.sleep(20)
         }
@@ -156,9 +162,9 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("a write drops only the entries that read the view, through nested views, subqueries and db.table names") {
     val g = root.newSession()
-    g.registerTable("base", table(30))
-    g.registerTable("other", table(30))
-    g.registerTable("hello.world", table(30))
+    g.registerTable("base", table(g, 30))
+    g.registerTable("other", table(g, 30))
+    g.registerTable("hello.world", table(g, 30))
     // a view registered from a facade DataFrame over another view
     g.registerTable("nested", g.sqlDF("SELECT k, v FROM base WHERE v > 5"))
     val overBase = Seq(joinSql("base"), joinSql("nested"),
@@ -170,7 +176,7 @@ class PlanCacheSpec extends AnyFunSuite {
     val warm = g.cacheStats
     assert(warm.entries == all.size && warm.invalidated == 0, s"$warm")
 
-    g.registerTable("base", table(30, 2L))
+    g.registerTable("base", table(g, 30, 2L))
     val afterBase = g.cacheStats
     assert(afterBase.invalidated == overBase.size, s"$afterBase")
     assert(afterBase.entries == all.size - overBase.size, s"$afterBase")
@@ -181,7 +187,7 @@ class PlanCacheSpec extends AnyFunSuite {
     // and the dropped ones read the new version
     assert(sorted(g.sql(joinSql("base"))) == direct(g, joinSql("base")))
 
-    g.registerTable("hello.world", table(30, 3L))
+    g.registerTable("hello.world", table(g, 30, 3L))
     assert(g.cacheStats.invalidated == overBase.size + 1)
     assert(sorted(g.sql(overQualified)) == direct(g, overQualified))
   }
@@ -201,7 +207,7 @@ class PlanCacheSpec extends AnyFunSuite {
       val q = s"SELECT k, count(*) AS n FROM $name GROUP BY k"
       (1 to 3).foreach(_ => g.sql(q))
       assert(g.cacheStats.resultHits == 1, s"${g.cacheStats}")
-      g.registerTable(name, table(20))
+      g.registerTable(name, table(g, 20))
       assert(sorted(g.sql(q)) == direct(g, q), "a read kept the shadowed persistent table's rows")
       assert(sorted(g.sql(q)) == Seq("[0,2]", "[1,2]", "[2,2]", "[3,2]", "[4,2]", "[5,2]",
         "[6,2]", "[7,2]", "[8,2]", "[9,2]"))
@@ -210,7 +216,9 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("a compile that overlaps a write to one of its views is not cached") {
     val g = root.newSession()
-    g.registerTable("ov_t", table(10, 1L))
+    // a DataTable: the test expression holds a closure, which cannot be
+    // shipped to a Spark task
+    g.registerTable("ov_t", local(10, 1L))
     // the analyzer type-checks WriteDuringCompile after it resolved ov_t;
     // when armed, another thread publishes a new version of ov_t right
     // then, in the middle of the compile, as a concurrent client would
@@ -218,7 +226,7 @@ class PlanCacheSpec extends AnyFunSuite {
     val version = new AtomicLong(1L)
     val write = () => if (armed.getAndSet(false)) {
       val n = version.incrementAndGet()
-      val w = new Thread(() => g.registerTable("ov_t", table(10, n)))
+      val w = new Thread(() => g.registerTable("ov_t", local(10, n)))
       w.start()
       w.join()
     }
@@ -244,10 +252,10 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("frozen entries release their executed plan; results over the bound and pinned plans are bounded") {
     val g = root.newSession()
-    g.registerTable("mem_t", table(40))
+    g.registerTable("mem_t", table(g, 40))
     val q = joinSql("mem_t")
-    g.sql(q)
-    g.sql(q)
+    assert(jobsDuring(g)(g.sql(q)) > 0, "the join ran no Spark job")
+    assert(jobsDuring(g)(g.sql(q)) > 0, "the join ran no Spark job")
     assert(g.cacheStats.heldPlans == 0, s"a frozen entry kept its executed plan: ${g.cacheStats}")
     assert(!finalPlan(g.sqlDF(q)), "a frozen entry kept its executed plan")
     val want = direct(g, q)
@@ -284,14 +292,15 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("DataFrames run through sqlDF count toward the bound on entries that hold a plan") {
     val g = root.newSession()
-    g.registerTable("mem_t", table(40))
+    g.registerTable("mem_t", table(g, 40))
     // twelve texts cached and run only through sqlDF: none is settled, so
     // each holds the plan its caller ran
     val texts = (1 to 12).map(i => joinSql("mem_t", i))
-    texts.foreach { t =>
+    val jobs = jobsDuring(g)(texts.foreach { t =>
       g.sqlDF(t)
       g.sqlDF(t).collect()
-    }
+    })
+    assert(jobs >= texts.size, s"${texts.size} joins ran $jobs Spark jobs")
     val s = g.cacheStats
     assert(s.heldPlans == 8 && s.entries == 8 && s.evictions == 4, s"$s")
 
@@ -302,7 +311,7 @@ class PlanCacheSpec extends AnyFunSuite {
     g.sql(fq)
     val lent = g.sqlDF(fq)
     assert(g.sqlDF(fq) eq lent, "sqlDF returned a new DataFrame for an unchanged frozen entry")
-    lent.collect()
+    assert(jobsDuring(g)(lent.collect()) > 0, "the lent DataFrame ran no Spark job")
     assert(finalPlan(lent))
     texts.take(8).foreach { t =>
       g.sqlDF(t)
@@ -316,7 +325,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("cacheStats counts a scripted sequence of calls") {
     val g = root.newSession()
-    g.registerTable("t", table(20))
+    g.registerTable("t", table(g, 20))
     val q = joinSql("t")
     val clock = "SELECT k, max(current_timestamp()) AS ts FROM t GROUP BY k"
     g.sql(q) // first sighting
@@ -329,7 +338,7 @@ class PlanCacheSpec extends AnyFunSuite {
     g.sql("SELECT 1 AS once") // first sighting
     g.sql("CREATE OR REPLACE TEMPORARY VIEW cmd_v AS SELECT 1 AS x") // drops both entries
     g.sql(q) // miss: the text stays admitted
-    g.registerTable("t", table(20, 2L)) // drops q
+    g.registerTable("t", table(g, 20, 2L)) // drops q
     g.sql(q) // miss
     g.sql(q) // result hit
     val s = g.cacheStats
