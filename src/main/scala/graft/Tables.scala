@@ -28,60 +28,17 @@ object Tables {
     * generation produces the same TIMESTAMP column downstream. */
   private val tsCols: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
-  /** Per-session memo of the LOADED (schema-resolved) DataFrames, keyed on
-    * (dir, name). Resolving a read costs a driver-side file listing and a
-    * footer read (see [[readParquet]]: no Spark job, but still I/O and
-    * analysis on every call), which every query invocation would re-pay.
-    * The memo caches the resolved LOGICAL PLAN only: every action still
-    * scans parquet (tasks re-read row groups; nothing row-level is cached),
-    * exactly like the long-standing `registerAll` temp views the SQL-based
-    * queries already go through.
-    *
-    * PRECONDITION (r16 ADVICE): inputs under `dir` are immutable for the
-    * session's lifetime — the memo pins the first call's file listing and
-    * schema snapshot, so a tool that rewrites the corpus mid-session must
-    * either use a fresh session or go through [[raw]]. Eviction (r16
-    * ADVICE): the map is weak-KEYED, but a DataFrame value strongly
-    * references its session (Dataset.sparkSession), so weak keys alone
-    * would never collect an entry — the application-end listener below
-    * drops a stopped context's entries explicitly, the same lifecycle
-    * QueryUtil.hookEviction gives the persist memo. */
-  private val loadMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[(String, String), DataFrame]]()
-
-  private val evictionHooked =
-    new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]()
-
-  private def hookEviction(sc: org.apache.spark.SparkContext): Unit =
-    if (evictionHooked.put(sc, java.lang.Boolean.TRUE) == null) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          loadMemo.synchronized {
-            val it = loadMemo.keySet().iterator()
-            while (it.hasNext) if (it.next().sparkContext eq sc) it.remove()
-          }
-      })
-    }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** The schema-resolved read of `dir/name`, memoized per session in
+    * [[SessionRegistry]] (see there for what an entry holds, and the
+    * precondition that `dir` does not change). */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (spark.conf.getOption("graft.cache.tables").contains("true")) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       cached(spark, dir, name)
-    } else loadMemo.synchronized {
-      hookEviction(spark.sparkContext)
-      var m = loadMemo.get(spark)
-      if (m == null) { m = new java.util.HashMap; loadMemo.put(spark, m) }
-      val k = (dir, name)
-      var df = m.get(k)
-      if (df == null) {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = raw(spark, dir, name)
-        m.put(k, df)
-      }
-      df
+    } else SessionRegistry.memo(spark, SessionRegistry.Loaded(dir, name)) {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      raw(spark, dir, name)
     }
-  }
 
   /** Read an UNPARTITIONED parquet path without a Spark job: the schema
     * comes from the footer on the driver (`ParquetSchemaBridge`), where
@@ -122,13 +79,11 @@ object Tables {
   }
 
   /** Register every corpus table as a temp view named after the table.
-    * Memoized per (session, dir): SQL-based queries call this on every
-    * invocation, and re-resolving ten views each time is waste. */
-  private val registered = new java.util.WeakHashMap[SparkSession, String]()
-  def registerAll(spark: SparkSession, dir: String): Unit = registered.synchronized {
-    if (registered.get(spark) != dir) {
+    * Memoized per (session, dir) in [[SessionRegistry]]: SQL-based queries
+    * call this on every invocation, and re-resolving ten views each time is
+    * waste. */
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    SessionRegistry.registerViews(spark, dir) {
       names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-      registered.put(spark, dir)
     }
-  }
 }

@@ -4,87 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
+import graft.SessionRegistry
+
 private[graft] object QueryUtil {
-
-  /** Memoized persist: one cached DataFrame per (session, key), returned to
-    * every invocation — repeated runs (bench cold+warm, verify) reuse the
-    * same cache entry instead of stacking up orphaned persisted copies.
-    *
-    * Eviction is EXPLICIT, not WeakHashMap semantics: the cached DataFrame
-    * values strongly reference their SparkSession key (via QueryExecution),
-    * so weak keying alone would never collect an entry. Two mechanisms:
-    * (a) a listener on each session's SparkContext drops every entry bound
-    * to that context at application end — sessions cannot outlive their
-    * context, so this frees all of a stopped context's DataFrames in
-    * long-running multi-session JVMs; (b) per-session LRU capping
-    * (`graft.persist.maxEntries`, default 64 — far above any single
-    * pipeline's working set): inserting past the cap unpersists the
-    * least-recently-USED entry, so a long-lived multi-corpus service can't
-    * accumulate unbounded storage memory. Eviction only costs recompute on
-    * the next call (the entry rebuilds through the same memo) — never
-    * correctness. (The map stays weak-keyed only as identity-keying
-    * hygiene: a new session can never alias a dead one's entry.) */
-  private val persistedMemo =
-    new java.util.WeakHashMap[SparkSession, SessionMemo]()
-
-  /** Access-ordered per-session memo with LRU capping. Locking is the
-    * memo's intrinsic (reentrant) monitor, so a `mk` that nests
-    * persistKeyed calls on the same session cannot deadlock; builds happen
-    * OUTSIDE the lock (see persistKeyed). */
-  private final class SessionMemo {
-    private val map =
-      new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) // access-order
-    def get(key: String): DataFrame = synchronized(map.get(key))
-    /** Insert unless present; returns (winner, entries evicted by LRU).
-      * The cap is passed per call so a later conf change takes effect on
-      * the next insertion, not only at memo creation. */
-    def putIfAbsent(key: String, df: DataFrame, maxEntries: Int): (DataFrame, Seq[DataFrame]) =
-      synchronized {
-        val prev = map.get(key)
-        if (prev != null) (prev, Nil)
-        else {
-          map.put(key, df)
-          val evicted = Seq.newBuilder[DataFrame]
-          while (map.size() > maxEntries) {
-            val eldest = map.entrySet().iterator().next()
-            evicted += eldest.getValue
-            map.remove(eldest.getKey)
-          }
-          (df, evicted.result())
-        }
-      }
-    /** Snapshot of the live entries (for the eviction cross-uncache guard). */
-    def values: Seq[DataFrame] =
-      synchronized(map.values().toArray(Array.empty[DataFrame]).toSeq)
-    /** Remove every entry whose key starts with `prefix`; returns the
-      * removed frames (caller unpersists under the survivor guard). */
-    def removePrefix(prefix: String): Seq[DataFrame] = synchronized {
-      val removed = Seq.newBuilder[DataFrame]
-      val it = map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) { removed += e.getValue; it.remove() }
-      }
-      removed.result()
-    }
-  }
-
-  /** Contexts that already carry the eviction listener (weak: value holds no
-    * ref to the key, so a collected context drops its marker). */
-  private val evictionHooked =
-    new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]()
-
-  private def hookEviction(sc: org.apache.spark.SparkContext): Unit =
-    if (evictionHooked.put(sc, java.lang.Boolean.TRUE) == null) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          persistedMemo.synchronized {
-            val it = persistedMemo.keySet().iterator()
-            while (it.hasNext) if (it.next().sparkContext eq sc) it.remove()
-          }
-      })
-    }
 
   /** The memo's lineage barrier (r17, VERDICT r16 item 3). `localCheckpoint`
     * blocks live ONLY on executors: locally invisible, but on a real cluster
@@ -117,26 +39,25 @@ private[graft] object QueryUtil {
     } else df.localCheckpoint(eager = false)
   }
 
+  /** Memoized persist: one barriered DataFrame per (session, key), returned
+    * to every invocation, so repeated runs (bench cold+warm, verify) reuse
+    * one entry instead of stacking up orphaned copies. The entries live in
+    * [[graft.SessionRegistry]] under `Persisted(key)`, which bounds them per
+    * session (LRU) and drops them at application end. Eviction only costs
+    * recompute on the next call, never correctness. */
   def persistKeyed(s: SparkSession, key: String, mk: => DataFrame): DataFrame = {
-    val perSession = persistedMemo.synchronized {
-      hookEviction(s.sparkContext)
-      var m = persistedMemo.get(s)
-      if (m == null) { m = new SessionMemo; persistedMemo.put(s, m) }
-      m
-    }
-    val cap = s.conf.getOption("graft.persist.maxEntries")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(64)
-    // The build runs OUTSIDE the memo lock: `mk` may itself call
+    val k = SessionRegistry.Persisted(key)
+    // The build runs OUTSIDE the registry lock: `mk` may itself call
     // persistKeyed on the same session (d56's components builder runs the
     // jaccard pipeline, which memoizes its own intermediates) and may take
-    // arbitrarily long. get-then-putIfAbsent tolerates that nesting; a
+    // arbitrarily long. get-then-insert tolerates that nesting; a
     // racing duplicate build is harmless — one copy wins, and the loser is
     // simply DROPPED, not unpersisted: Spark's CacheManager keys cache
     // entries by logical-plan sameResult, so the loser and winner (built
     // from the same `mk` plan) share ONE cache entry, and unpersisting the
     // loser would silently uncache the winner too. LRU eviction is safe
     // because distinct memo keys come from distinct plans.
-    val hit = perSession.get(key)
+    val hit = SessionRegistry.get(s, k)
     if (hit != null) hit
     else {
       // r16 (guide §3.3/§7.3: very large plans make PLANNING the
@@ -153,21 +74,8 @@ private[graft] object QueryUtil {
       // r17: routed through `barrier` — reliable checkpoint on clusters
       // that configure a checkpoint dir, localCheckpoint locally.
       val built = barrier(s, mk)
-      val (winner, evicted) = perSession.putIfAbsent(key, built, cap)
-      // Cross-uncache guard (mirrors the loser path below): CacheManager
-      // keys cache entries by logical-plan sameResult, so if a SURVIVING
-      // entry's plan sameResults an evicted one, unpersisting the evictee
-      // would silently uncache the survivor too. Distinct memo keys wrap
-      // distinct plans today, but that is a convention of the current
-      // callers, not an invariant the map can enforce — guard, don't assume.
-      // snapshot survivors only when something was actually evicted — the
-      // common (under-cap) miss path pays neither the lock nor the copy
-      val survivors = if (evicted.isEmpty) Nil else perSession.values
-      evicted.foreach { e =>
-        if (!survivors.exists(v =>
-            v.queryExecution.analyzed.sameResult(e.queryExecution.analyzed)))
-          e.unpersist()
-      }
+      val (winner, evicted) = SessionRegistry.insert(s, k, built)
+      release(s, evicted)
       // a same-plan loser shares the winner's single cache entry and must
       // NOT be unpersisted (see the comment above) — but builders that end
       // in localCheckpoint (cc:/scc:/ivf: keys) yield run-specific
@@ -180,6 +88,24 @@ private[graft] object QueryUtil {
       winner
     }
   }
+
+  /** Unpersist entries that left the memo. Cross-uncache guard (mirrors the
+    * loser path in persistKeyed): CacheManager keys cache entries by
+    * logical-plan sameResult, so if a SURVIVING entry's plan sameResults a
+    * gone one, unpersisting the gone one would silently uncache the survivor
+    * too. Distinct memo keys wrap distinct plans today, but that is a
+    * convention of the current callers, not an invariant the map can
+    * enforce — guard, don't assume. Survivors are snapshotted only when
+    * something left, so the common miss path pays neither lock nor copy. */
+  private def release(s: SparkSession, gone: Seq[DataFrame]): Unit =
+    if (gone.nonEmpty) {
+      val survivors = SessionRegistry.persisted(s)
+      gone.foreach { e =>
+        if (!survivors.exists(v =>
+            v.queryExecution.analyzed.sameResult(e.queryExecution.analyzed)))
+          e.unpersist()
+      }
+    }
 
   /** Drop and unpersist every memo entry of `s` whose key starts with
     * `prefix` — targeted eviction for measurement harnesses (ScaleProbe's
@@ -197,24 +123,14 @@ private[graft] object QueryUtil {
     * local checkpoint's RDD is data LOSS for any still-live plan that embeds
     * it (a nested persistKeyed consumer whose own barrier has not computed
     * yet would become unrunnable), and measurement passes only need the
-    * REBUILD guarantee, not eager block frees. The unpersist below still
-    * runs for any legacy CacheManager-persisted entry and is harmless for
+    * REBUILD guarantee, not eager block frees. The unpersist in `release`
+    * still runs for any legacy CacheManager-persisted entry and is harmless for
     * barrier entries; the sameResult guard protects the former. The
-    * SparkEntry plan memo is invalidated too, so no cached outer query plan
-    * keeps serving the evicted entry's stale LogicalRDD as a warm path. */
-  def unpersistKeyed(s: SparkSession, prefix: String): Unit = {
-    val perSession = persistedMemo.synchronized(persistedMemo.get(s))
-    if (perSession == null) return
-    val removed = perSession.removePrefix(prefix)
-    if (removed.isEmpty) return
-    graft.SparkEntry.invalidatePlanMemo(s)
-    val survivors = perSession.values
-    removed.foreach { e =>
-      if (!survivors.exists(v =>
-          v.queryExecution.analyzed.sameResult(e.queryExecution.analyzed)))
-        e.unpersist()
-    }
-  }
+    * registry drops the session's memoized plans with the removed entries,
+    * so no cached outer query plan keeps serving a removed entry's stale
+    * LogicalRDD as a warm path. */
+  def unpersistKeyed(s: SparkSession, prefix: String): Unit =
+    release(s, SessionRegistry.removePersisted(s, prefix))
 
   /** The 30-minute session gap — single definition shared by the batch q45
     * `session_window`, both streaming sessionizers (StreamingOps), and

@@ -1111,7 +1111,6 @@ class OperatorsSpec extends AnyFunSuite {
   test("persistKeyed caps per-session entries by LRU; evicted keys rebuild correctly") {
     import graft.queries.QueryUtil
     val s2 = spark.newSession()
-    s2.conf.set("graft.persist.maxEntries", "2")
     var builds = 0
     def mk(n: Int) = { builds += 1; s2.range(n).toDF("v") }
     val a = QueryUtil.persistKeyed(s2, "lru_a", mk(10))
@@ -1121,16 +1120,27 @@ class OperatorsSpec extends AnyFunSuite {
     assert(b.count() == 20)
     val a2 = QueryUtil.persistKeyed(s2, "lru_a", mk(10)) // touch a: b becomes LRU
     assert(a2 eq a, "touch must return the memoized frame, not rebuild")
-    QueryUtil.persistKeyed(s2, "lru_c", mk(30)) // cap 2 -> evicts b
+    // fill the session up to the cap with lazy entries (nothing runs)
+    val fillers = SessionRegistry.maxPersisted - 2
+    (0 until fillers).foreach(i => QueryUtil.persistKeyed(s2, s"lru_fill_$i", mk(i)))
+    assert(builds == 2 + fillers)
+    // a memoized outer plan before the eviction
+    val q01 = SparkEntry.queries("q01")(s2, dir)
+    assert(SparkEntry.queries("q01")(s2, dir) eq q01)
+    QueryUtil.persistKeyed(s2, "lru_c", mk(30)) // one past the cap -> evicts b
     // r16: entries are lazy localCheckpoints — eviction drops the memo's
     // strong reference (the RDD persist is GC-cleaned by the
     // ContextCleaner), so the contract asserts are behavioral: the
     // survivor still HITS, the evicted key REBUILDS.
     assert(QueryUtil.persistKeyed(s2, "lru_a", mk(10)) eq a,
       "recently-used entry was evicted")
-    assert(builds == 3, "survivor hit must not rebuild")
+    assert(builds == 3 + fillers, "survivor hit must not rebuild")
+    // an eviction drops the session's memoized plans, which could embed the
+    // evicted entry and keep its blocks alive
+    assert(!(SparkEntry.queries("q01")(s2, dir) eq q01),
+      "LRU eviction must drop the session's plan memo")
     val b2 = QueryUtil.persistKeyed(s2, "lru_b", mk(20))
-    assert(builds == 4, "evicted key must rebuild through the memo")
+    assert(builds == 4 + fillers, "evicted key must rebuild through the memo")
     assert(b2.count() == 20)
   }
 

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -9,7 +14,9 @@ import graft.queries.{QueryUtil, Relational}
 
 /** Round-17 optimization gates: the dsum NaN/Inf runtime guard (VERDICT r16
   * item 5), the SparkEntry analyzed-plan memo (item 4), and the conf-routed
-  * reliable barrier (item 3). */
+  * reliable barrier (item 3); and the per-session memos of
+  * `SessionRegistry`: which contract builds may be memoized, and
+  * first-insert-wins under concurrent first calls. */
 class R17OptimizationsSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
@@ -104,5 +111,57 @@ class R17OptimizationsSpec extends AnyFunSuite {
       // master never routes reliable, so a lingering dir is inert)
       hadCk.foreach(s.sparkContext.setCheckpointDir)
     }
+  }
+
+  test("the ids whose build still starts a Spark job with its intermediates memoized are exactly SparkEntry.eagerBuild") {
+    // A build whose job bakes computed results into its plan must not be
+    // memoized. A persistKeyed barrier also starts jobs at its first build
+    // (AQE materializes every stage but the last when the checkpoint RDD is
+    // made), but its rows live in the memoized barrier, so a plan over it is
+    // safe to memoize: each id is built twice, and the second build, with
+    // its intermediates memoized, is the one that counts.
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def startsJob(build: => Any): Boolean = {
+      val before = jobs.get()
+      build
+      ListenerBridge.drain(sc, 10000)
+      jobs.get() > before
+    }
+    ListenerBridge.drain(sc, 10000)
+    sc.addSparkListener(listener)
+    val eager = try {
+      SparkEntry.builders.toSeq.sortBy(_._1).collect {
+        case (id, build) if startsJob(build(s, dir)) && startsJob(build(s, dir)) => id
+      }.toSet
+    } finally sc.removeSparkListener(listener)
+    assert(eager == SparkEntry.eagerBuild,
+      s"builds that start a job: ${eager.toSeq.sorted}; eagerBuild: " +
+        SparkEntry.eagerBuild.toSeq.sorted)
+  }
+
+  test("concurrent first calls on a new session all get the first inserted entry") {
+    val s = spark.newSession()
+    val threads = 8
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val futures = (1 to threads).map(_ => pool.submit(new Callable[(AnyRef, AnyRef)] {
+        def call(): (AnyRef, AnyRef) = {
+          start.await()
+          (Tables.load(s, dir, "orders"), SparkEntry.queries("q01")(s, dir))
+        }
+      }))
+      start.countDown()
+      val got = futures.map(_.get(120, TimeUnit.SECONDS))
+      assert(got.forall(_._1 eq got.head._1), "Tables.load returned different frames")
+      assert(got.forall(_._2 eq got.head._2), "SparkEntry.queries returned different frames")
+      assert(Tables.load(s, dir, "orders") eq got.head._1)
+      assert(SparkEntry.queries("q01")(s, dir) eq got.head._2)
+    } finally pool.shutdownNow()
   }
 }
