@@ -30,7 +30,13 @@ object SparkEntry {
     * RESULTS, not a plan — every invocation must rebuild them. A build that
     * routes an as-of join or global merge to its range form also runs one
     * job, sampling the range bounds; those bounds steer balance only, never
-    * rows, so memoizing such a plan stays safe and it is not listed here. */
+    * rows, so memoizing such a plan stays safe and it is not listed here.
+    * So does a build that makes a `QueryUtil.persistKeyed` barrier: under
+    * AQE, `localCheckpoint(eager = false)` runs the barrier's stage jobs
+    * during the build (first builds at sf0.001: d51 3 jobs, d52 3, d56 34,
+    * d81 7, d82 16, s60 15, s62 32, s68 2, s69 24, s72 25, s83 2). Their rows
+    * live in the memoized barrier, not in literals, so those plans stay
+    * memoized too; a second build runs no job. */
   private[graft] val eagerBuild = Set("t58", "u68", "d86", "s74", "d72")
 
   /** Every other query's analyzed DataFrame is memoized per (session, dir,

@@ -141,5 +141,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the two join rewrites above see a join of local relations before the
     // fold's hash join could replace it.
     e.injectOptimizerRule(_ => ClockSafeConvertToLocalRelation)
+    // the facade's driver-resident tables (DriverRelation) plan to a
+    // LocalTableScanExec, like a LocalRelation
+    e.injectPlannerStrategy(_ => DriverRelationStrategy)
   }
 }

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, View}
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec, ResultQueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -32,12 +32,13 @@ import org.apache.spark.util.SizeEstimator
   *    a view that now shadows a persistent table reaches the plans that read
   *    the table. This replaces the reference's lazy `NamedLocalRelation`
   *    rebinding; commands (DDL, INSERT) issued through `sql` still drop
-  *    every entry. A compile that overlaps any write is used once but not
-  *    cached.
+  *    every entry. A compile that overlaps a write to a name it read, or a
+  *    command, is used once but not cached; writes to other names do not
+  *    keep it out.
   *  - A text is cached only the second time it is seen, so one-off texts pin
   *    nothing. A first sighting keeps a weak handle on its DataFrame, which
-  *    the second sighting adopts if it is still alive and no write happened
-  *    since.
+  *    the second sighting adopts if it is still alive and no command and no
+  *    write to a name it read happened since.
   *  - After an entry's first complete execution, its result rows are frozen
   *    when running the plan again could not change them: no
   *    non-deterministic and no clock expression, and the result stage of the
@@ -62,22 +63,30 @@ import org.apache.spark.util.SizeEstimator
   *    every call, because AQE would otherwise replay the first call's
   *    clock from its materialized stages.
   *  - Small file tables registered through `registerTable(name, df)` are
-  *    served from driver snapshots, the reference's `LocalRelation` tables:
-  *    a deterministic, clock-free batch DataFrame whose leaves are all file
-  *    scans by path, that reads no view, and whose optimizer size estimate
-  *    is at most `MaxSnapshotEstimateBytes`. Registration stays job-free;
-  *    the first facade call that reads the table (`sql`, `sqlDF`, `table`,
-  *    `executeAndRegister`) collects its rows once, as `UnsafeRow`s, and
-  *    replaces the live view with a `LocalRelation` over them, unless the
-  *    view was re-registered through the facade meanwhile: the newer
-  *    registration always wins. (A view replaced by a command, through
-  *    `sql` or on the session, is checked for too, but not atomically: a
-  *    command that lands while the snapshot is swapped in is overwritten.)
+  *    served from driver snapshots, the reference's `NamedLocalRelation`
+  *    tables: a deterministic, clock-free batch DataFrame whose leaves are
+  *    all file scans by path, that reads no view, and whose optimizer size
+  *    estimate is at most `MaxSnapshotEstimateBytes`. Registration stays
+  *    job-free; the first facade call that reads the table (`sql`, `sqlDF`,
+  *    `table`, `executeAndRegister`) collects its rows once, as
+  *    `UnsafeRow`s, and replaces the live view with a `DriverRelation` over
+  *    them, unless the view was re-registered through the facade
+  *    meanwhile: the newer registration always wins. (A view replaced by a
+  *    command, through `sql` or on the session, is checked for too, but not
+  *    atomically: a command that lands while the snapshot is swapped in is
+  *    overwritten.)
   *    The collected rows are bounded per table and per facade
   *    (`MaxSnapshotBytes`, `MaxSnapshotsBytes`); a table over a bound keeps
-  *    its live view. Reads over snapshots and registered `DataTable`s fold
-  *    to driver-side relations (ClockSafeConvertToLocalRelation, joins
-  *    included) and run no Spark job.
+  *    its live view. A `DataTable` registered through
+  *    `registerTable(name, table)` is held in a `DriverRelation` at once.
+  *    That leaf keeps its rows out of Catalyst's expression walks: the
+  *    optimizer's rules no longer visit every row of a snapshot in each
+  *    iteration, and only the folds read them. Reads over snapshots and
+  *    registered `DataTable`s fold to driver-side relations
+  *    (ClockSafeConvertToLocalRelation, joins included) and run no Spark
+  *    job; the folds use generated code only where it cannot inline a
+  *    literal of the query text, so an ad-hoc text that differs from an
+  *    earlier one only in a literal compiles nothing.
   *  - Executions of everything else are plain Spark jobs: thread-safe,
   *    spill-aware, distributed. No unbounded build-side memory (the
   *    reference's `Long.MaxValue` `StaticMemoryManager` hash joins are the
@@ -105,8 +114,14 @@ class GraftSession private (val spark: SparkSession) {
     }
 
   /** Writes and commands are numbered, so a compile can tell whether one
-    * overlapped it. */
+    * that concerns it overlapped it: `writeSeq` is the newest number,
+    * `written` holds the newest write of each relation name (a name it no
+    * longer holds was last written at `writtenFloor` or before) and
+    * `commandSeq` the newest command. */
   private var writeSeq = 0L
+  private val written = new java.util.HashMap[String, java.lang.Long]()
+  private var writtenFloor = 0L
+  private var commandSeq = 0L
   private var frozenBytes = 0L
   /** Cached entries whose `df` is set. */
   private var heldPlans = 0
@@ -173,7 +188,7 @@ class GraftSession private (val spark: SparkSession) {
       else {
         start = writeSeq
         prior = seen.get(sqlText)
-        if (prior != null && prior.df != null && prior.compiledAt == writeSeq)
+        if (prior != null && prior.df != null && unchangedSince(prior.compiledAt, prior.deps))
           reuse = prior.df.get
       }
     }
@@ -196,9 +211,9 @@ class GraftSession private (val spark: SparkSession) {
         val e = newEntry(sqlText, df)
         val admitted = lock.synchronized {
           if (prior == null) {
-            seen.put(sqlText, Sighting(new WeakReference(df), compiledAt))
+            seen.put(sqlText, Sighting(new WeakReference(df), compiledAt, e.deps))
             false
-          } else if (writeSeq != compiledAt || cache.containsKey(sqlText)) false
+          } else if (!unchangedSince(compiledAt, e.deps) || cache.containsKey(sqlText)) false
           else {
             seen.remove(sqlText)
             cache.put(sqlText, e)
@@ -288,9 +303,19 @@ class GraftSession private (val spark: SparkSession) {
     seen.put(e.text, Readmit)
   }
 
+  /** True when no command and no write to one of `deps` came after the
+    * write number `since`. Guarded by `lock`. */
+  private def unchangedSince(since: Long, deps: Set[String]): Boolean =
+    commandSeq <= since && deps.forall { d =>
+      val w = written.get(d)
+      (if (w == null) writtenFloor else w.longValue) <= since
+    }
+
   /** Drop the entries that read `view`, directly or through another view. */
   private def invalidate(view: String): Unit = lock.synchronized {
     writeSeq += 1
+    written.put(view, writeSeq)
+    if (written.size > MaxWrittenNames) { written.clear(); writtenFloor = writeSeq }
     val it = cache.values.iterator
     while (it.hasNext) {
       val e = it.next()
@@ -300,6 +325,7 @@ class GraftSession private (val spark: SparkSession) {
 
   private def invalidateAll(): Unit = lock.synchronized {
     writeSeq += 1
+    commandSeq = writeSeq
     counters.invalidated.add(cache.size)
     cache.values.asScala.foreach(drop)
     cache.clear()
@@ -337,8 +363,11 @@ class GraftSession private (val spark: SparkSession) {
   def cacheStats: CacheStats =
     lock.synchronized(counters.snapshot(cache.size, heldPlans, frozenBytes))
 
+  /** Register `table`'s rows as the temp view `name`, held on the driver
+    * in a `DriverRelation`. */
   def registerTable(name: String, table: DataTable): Unit =
-    registerTable(name, spark.createDataFrame(table.rows.asJava, table.schema))
+    registerTable(name,
+      DatasetBridge.ofRows(spark, DriverRelation.fromRows(table.schema, table.rows)))
 
   /** Register `df` as the temp view `name`. A small file table becomes a
     * driver snapshot on the first facade read that needs it (see
@@ -421,8 +450,8 @@ class GraftSession private (val spark: SparkSession) {
             snapshotBytes + bytes <= MaxSnapshotsBytes) {
           val attrs = p.df.queryExecution.analyzed.output
             .map(a => AttributeReference(a.name, a.dataType, a.nullable, a.metadata)())
-          DatasetBridge.ofRows(spark, LocalRelation(attrs, ArraySeq.unsafeWrapArray(rows)))
-            .createOrReplaceTempView(p.view)
+          val snapshot = DriverRelation(attrs, new DriverRows(ArraySeq.unsafeWrapArray(rows)))
+          DatasetBridge.ofRows(spark, snapshot).createOrReplaceTempView(p.view)
           snapshots.put(p.key, bytes)
           snapshotBytes += bytes
           invalidate(p.key)
@@ -468,6 +497,9 @@ object GraftSession {
   // Bounds of the plan cache: fixed constants, not options.
   private val MaxEntries = 1000
   private val MaxSightings = 1000
+  /** Relation names whose newest write is kept; past it, the compiles that
+    * began before the newest write are not cached. */
+  private val MaxWrittenNames = 1000
   /** Entries that hold a DataFrame that may have run: each can pin a
     * broadcast relation and AQE stage state, about 3 MB for a small join. */
   private val MaxHeldPlans = 8
@@ -504,10 +536,11 @@ object GraftSession {
   }
 
   /** A text seen but not cached: a weak handle on the DataFrame its first
-    * compile built (null once it left the cache), and the write number when
-    * that compile began. */
-  private final case class Sighting(df: WeakReference[DataFrame], compiledAt: Long)
-  private val Readmit = Sighting(null, 0L)
+    * compile built (null once it left the cache), the write number when
+    * that compile began, and the relation names its plan read. */
+  private final case class Sighting(df: WeakReference[DataFrame], compiledAt: Long,
+      deps: Set[String])
+  private val Readmit = Sighting(null, 0L, Set.empty)
 
   private sealed trait Outcome
   private case object Hit extends Outcome
@@ -667,9 +700,11 @@ object GraftSession {
   }
 
   /** Wrap an existing session (extensions must already include
-    * GraftExtensions for exec-time clock semantics). */
+    * GraftExtensions for exec-time clock semantics; the planner strategy
+    * for driver-resident tables is added when it is missing). */
   def apply(spark: SparkSession): GraftSession = {
     ensureClockSafety(spark)
+    DatasetBridge.ensureStrategy(spark, DriverRelationStrategy)
     facadeFor(spark)
   }
 }

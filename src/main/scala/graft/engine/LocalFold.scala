@@ -3,10 +3,11 @@ package graft.engine
 import java.util.concurrent.atomic.LongAdder
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, If, IntegerLiteral, InterpretedMutableProjection, InterpretedOrdering, InterpretedUnsafeProjection, IsNaN, JoinedRow, Literal, Predicate, SpecificInternalRow, Unevaluable, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, DeclarativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.{Add, Attribute, AttributeReference, AttributeSet, BasePredicate, BindReferences, BoundReference, Expression, GenericInternalRow, If, IntegerLiteral, InterpretedMutableProjection, InterpretedOrdering, InterpretedUnsafeProjection, IsNaN, JoinedRow, Literal, MutableProjection, Predicate, SpecificInternalRow, Unevaluable, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Count, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Limit, LocalRelation, LogicalPlan, Project, Sort}
@@ -26,9 +27,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
   * optimizes to a bare `LocalRelation` never submits a Spark job). This rule
   * restores that path with the one guard the stock rule lacks: a
   * Project/Filter/Limit/Sort (and, below, small Aggregate and equi-Join) over
-  * LocalRelations folds eagerly ONLY when its expressions are deterministic
-  * and contain no execution-clock expression — those plans keep their live
-  * per-execution semantics under the plan cache.
+  * driver-resident relations (`LocalRelation`s, and the `DriverRelation`s
+  * that hold the facade's snapshots and registered `DataTable`s, both read
+  * through `LocalRows`) folds eagerly ONLY when its expressions are
+  * deterministic and contain no execution-clock expression — those plans
+  * keep their live per-execution semantics under the plan cache.
   *
   * (Stricter than stock in one more way: the stock rule folds
   * non-deterministic projections too, which is sound for a single query but
@@ -36,16 +39,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
   * every re-execution. Skipping those keeps cached-plan re-execution
   * semantics identical to uncached.)
   *
-  * Joins of two LocalRelations fold with a driver-side hash join (inner,
-  * left/right outer, left semi and left anti, with an optional extra
-  * condition), so a facade query over the driver snapshots of small
+  * Joins of two driver-resident relations fold with a driver-side hash join
+  * (inner, left/right outer, left semi and left anti, with an optional
+  * extra condition), so a facade query over the driver snapshots of small
   * registered tables (GraftSession) runs no Spark job at all.
   *
-  * Every fold evaluates interpreted (`InterpretedMutableProjection`,
-  * `InterpretedUnsafeProjection`, `Predicate.createInterpreted`): generated
-  * code inlines literals, so an ad-hoc text with a new literal would pay a
-  * Janino compile on every call, while the folded inputs are small enough
-  * that interpretation costs less.
+  * A fold evaluates generated code (`UnsafeProjection.create`,
+  * `MutableProjection.create`, `Predicate.create`) where the query
+  * expressions behind it hold no literal: column pruning, join keys, join
+  * output, extra join conditions and filters without one, and the grouping
+  * key and buffer update of an aggregate whose grouping and aggregate
+  * inputs hold none. Spark caches generated classes by their source, which
+  * then depends only on the query's shape, so ad-hoc texts that differ in a
+  * literal compile nothing after the first. Where a literal would be inlined
+  * (a filter such as `c_acctbal > 123.45`), the fold evaluates interpreted
+  * (`InterpretedUnsafeProjection`, `InterpretedMutableProjection`,
+  * `Predicate.createInterpreted`): each new literal would otherwise pay a
+  * Janino compile, and the folded inputs are small enough that
+  * interpretation costs less. Sorts, an aggregate's initial values and its
+  * final projection (once per group) are always interpreted.
   */
 object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
 
@@ -58,19 +70,16 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case Project(projectList, l: LocalRelation) if projectList.forall(foldableExpr) =>
-      val projection = new InterpretedMutableProjection(projectList, l.output)
-      projection.initialize(0)
-      LocalRelation(projectList.map(_.toAttribute),
-        l.data.map(r => projection(r).copy()), l.isStreaming)
+    case Project(projectList, LocalRows(output, data, streaming)) if projectList.forall(foldableExpr) =>
+      val projection = unsafeProjection(projectList, output, projectList.forall(literalFree))
+      LocalRelation(projectList.map(_.toAttribute), data.map(r => projection(r).copy()), streaming)
 
-    case Limit(IntegerLiteral(limit), l: LocalRelation) =>
-      LocalRelation(l.output, l.data.take(limit), l.isStreaming)
+    case Limit(IntegerLiteral(limit), LocalRows(output, data, streaming)) =>
+      LocalRelation(output, data.take(limit), streaming)
 
-    case Filter(condition, l: LocalRelation) if foldableExpr(condition) =>
-      val predicate = Predicate.createInterpreted(BindReferences.bindReference(condition, l.output))
-      predicate.initialize(0)
-      LocalRelation(l.output, l.data.filter(row => predicate.eval(row)), l.isStreaming)
+    case Filter(condition, LocalRows(output, data, streaming)) if foldableExpr(condition) =>
+      val predicate = bindPredicate(condition, output)
+      LocalRelation(output, data.filter(row => predicate.eval(row)), streaming)
 
     // ORDER BY over an already-folded relation (e.g. the reference-style
     // `SELECT ... GROUP BY ... ORDER BY ... LIMIT n` micro-query, whose
@@ -78,20 +87,46 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     // the whole query stays job-free. SortOrder itself is Unevaluable, so
     // the guard checks its children; InterpretedOrdering applies the same
     // direction/null-ordering semantics the distributed sort uses.
-    case s @ Sort(order, _, l: LocalRelation, _)
-        if !l.isStreaming && order.forall(_.children.forall(foldableExpr)) =>
-      val ordering = new InterpretedOrdering(order, l.output)
-      LocalRelation(l.output, l.data.sorted(ordering), l.isStreaming)
+    case Sort(order, _, LocalRows(output, data, false), _)
+        if order.forall(_.children.forall(foldableExpr)) =>
+      val ordering = new InterpretedOrdering(order, output)
+      LocalRelation(output, data.sorted(ordering))
 
-    case agg: Aggregate if agg.child.isInstanceOf[LocalRelation] &&
-        !agg.child.asInstanceOf[LocalRelation].isStreaming &&
-        (agg.groupingExpressions ++ agg.aggregateExpressions).forall(foldableAggExpr) =>
-      foldAggregate(agg, agg.child.asInstanceOf[LocalRelation]).getOrElse(agg)
+    case agg @ Aggregate(grouping, results, LocalRows(output, data, false), _)
+        if (grouping ++ results).forall(foldableAggExpr) =>
+      foldAggregate(agg, output, data).getOrElse(agg)
 
-    case j @ Join(l: LocalRelation, r: LocalRelation, _, _, _)
-        if !l.isStreaming && !r.isStreaming =>
-      foldJoin(j, l, r).getOrElse(j)
+    case j @ Join(LocalRows(lo, ld, false), LocalRows(ro, rd, false), _, _, _) =>
+      foldJoin(j, Side(lo, ld), Side(ro, rd)).getOrElse(j)
   }
+
+  /** True when `e` holds no literal. Generated code inlines literals, so
+    * code for an expression that holds one would differ, and be compiled
+    * again, for every new literal of an ad-hoc text; code for one that
+    * holds none depends only on the query's shape and is compiled once
+    * (Spark caches generated classes by their source). */
+  private def literalFree(e: Expression): Boolean = !e.exists(_.isInstanceOf[Literal])
+
+  /** An unsafe projection of `exprs` over `input`: generated code when
+    * `generated` (the query expressions behind `exprs` are literal-free),
+    * else interpreted. */
+  private def unsafeProjection(exprs: Seq[Expression], input: Seq[Attribute],
+      generated: Boolean): UnsafeProjection =
+    if (generated) UnsafeProjection.create(exprs, input)
+    else InterpretedUnsafeProjection.createProjection(BindReferences.bindReferences(exprs, input))
+
+  /** `condition` over `input`: generated code when it holds no literal, else
+    * interpreted. */
+  private def bindPredicate(condition: Expression, input: Seq[Attribute]): BasePredicate = {
+    val p =
+      if (literalFree(condition)) Predicate.create(condition, input)
+      else Predicate.createInterpreted(BindReferences.bindReference(condition, input))
+    p.initialize(0)
+    p
+  }
+
+  /** One input of the join fold: its output and rows. */
+  private final case class Side(output: Seq[Attribute], data: Seq[InternalRow])
 
   /** A join whose output rows would take more heap than this stays a Spark
     * join. */
@@ -110,12 +145,12 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
 
   /** The bytes past the fixed portion of `side`'s rows as UnsafeRows: what
     * a row's strings, binaries and nested values add to a joined row. */
-  private def varBytes(side: LocalRelation): InternalRow => Int =
+  private def varBytes(side: Side): InternalRow => Int =
     if (side.output.forall(a => UnsafeRow.isFixedLength(a.dataType))) _ => 0
     else {
       val fixed = fixedBytes(side.output.size)
       // nullable throughout: the row of nulls an outer join pads with is sized too
-      val asUnsafe = InterpretedUnsafeProjection.createProjection(
+      val asUnsafe = UnsafeProjection.create(
         side.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, nullable = true) })
       (row: InternalRow) => row match {
         case u: UnsafeRow => u.getSizeInBytes - fixed
@@ -179,7 +214,8 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     * already sits in driver memory, so the fold can't make memory worse.
     * Returns None (plan unchanged, normal distributed path) for any shape
     * the substitution can't prove out. */
-  private def foldAggregate(agg: Aggregate, l: LocalRelation): Option[LocalRelation] = {
+  private def foldAggregate(agg: Aggregate, input: Seq[Attribute],
+      data: Seq[InternalRow]): Option[LocalRelation] = {
     val grouping = agg.groupingExpressions
     val results = agg.aggregateExpressions
 
@@ -217,31 +253,44 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     if (!finalExprs.forall(_.references.subsetOf(AttributeSet(keyAttrs ++ bufferAttrs))))
       return None
 
-    val keyProj = InterpretedUnsafeProjection.createProjection(
-      BindReferences.bindReferences(normGrouping, l.output))
+    // the key and the buffer update run once per input row: generated code
+    // when the grouping, and the aggregate inputs, hold no literal (the
+    // functions' own update expressions hold only fixed literals, and count
+    // evaluates only its nullable inputs: count(*) is count(1)); the
+    // initial values and the final projection run once per group
+    val inputs = aggCalls.flatMap(_.aggregateFunction match {
+      case c: Count => c.children.filter(_.nullable)
+      case f => f.children
+    })
+    val keyProj = unsafeProjection(normGrouping, input, grouping.forall(literalFree))
+    val updateExprs = funcs.flatMap(_.updateExpressions)
+    val updateProj =
+      if (inputs.forall(literalFree)) MutableProjection.create(updateExprs, bufferAttrs ++ input)
+      else new InterpretedMutableProjection(updateExprs, bufferAttrs ++ input)
     val initProj = new InterpretedMutableProjection(funcs.flatMap(_.initialValues), Nil)
-    val updateProj = new InterpretedMutableProjection(
-      funcs.flatMap(_.updateExpressions), bufferAttrs ++ l.output)
     val finalProj = new InterpretedMutableProjection(finalExprs, keyAttrs ++ bufferAttrs)
     Seq(initProj, updateProj, finalProj).foreach(_.initialize(0))
 
-    val groups = scala.collection.mutable.LinkedHashMap[UnsafeRow, SpecificInternalRow]()
+    val groups = new java.util.LinkedHashMap[UnsafeRow, SpecificInternalRow]()
     def newBuffer(): SpecificInternalRow = {
       val b = new SpecificInternalRow(bufferAttrs.map(_.dataType))
       initProj.target(b)(InternalRow.empty)
       b
     }
     // a global aggregate (no grouping) emits one row even over zero input
-    if (grouping.isEmpty) groups(keyProj(InternalRow.empty).copy()) = newBuffer()
+    if (grouping.isEmpty) groups.put(keyProj(InternalRow.empty).copy(), newBuffer())
     val joined = new JoinedRow
-    l.data.foreach { row =>
-      val buf = groups.getOrElseUpdate(keyProj(row).copy(), newBuffer())
+    data.foreach { row =>
+      // the projection reuses its key row: copy it only for a new group
+      val key = keyProj(row)
+      var buf = groups.get(key)
+      if (buf == null) { buf = newBuffer(); groups.put(key.copy(), buf) }
       updateProj.target(buf)(joined(buf, row))
     }
-    val out = groups.iterator.map { case (key, buf) =>
-      finalProj(joined(key, buf)).copy()
+    val out = groups.entrySet.iterator.asScala.map { e =>
+      finalProj(joined(e.getKey, e.getValue)).copy()
     }.toSeq
-    Some(LocalRelation(results.map(_.toAttribute), out, l.isStreaming))
+    Some(LocalRelation(results.map(_.toAttribute), out))
   }
 
   /** Driver-side hash join of two LocalRelations on their equi-join keys:
@@ -254,7 +303,7 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     * is not an equi-join of type inner, left/right outer, left semi or left
     * anti, for keys `hashKey` declines, and when the output rows pass
     * `MaxJoinOutputBytes`. */
-  private def foldJoin(j: Join, l: LocalRelation, r: LocalRelation): Option[LocalRelation] = {
+  private def foldJoin(j: Join, l: Side, r: Side): Option[LocalRelation] = {
     val (joinType, leftKeys, rightKeys, extra) = j match {
       case ExtractEquiJoinKeys(t, lk, rk, c, _, _, _, _)
           if (lk ++ rk ++ c).forall(foldableExpr) => (t, lk, rk, c)
@@ -268,8 +317,10 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
     val (probe, build) = if (probeLeft) (l, r) else (r, l)
     val normalized = (leftKeys ++ rightKeys).map(k => hashKey(k).getOrElse(return None))
     val (leftKey, rightKey) = normalized.splitAt(leftKeys.size)
-    def keyProjection(keys: Seq[Expression], side: LocalRelation): UnsafeProjection =
-      InterpretedUnsafeProjection.createProjection(BindReferences.bindReferences(keys, side.output))
+    // the normalization's own literals are fixed: the query's keys decide
+    val generatedKeys = (leftKeys ++ rightKeys).forall(literalFree)
+    def keyProjection(keys: Seq[Expression], side: Side): UnsafeProjection =
+      unsafeProjection(keys, side.output, generatedKeys)
     val buildKey = keyProjection(if (probeLeft) rightKey else leftKey, build)
     val probeKey = keyProjection(if (probeLeft) leftKey else rightKey, probe)
 
@@ -285,11 +336,7 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
       if (k.anyNull) Nil else table.getOrElse(k, Nil)
     }
 
-    val condition = extra.map { c =>
-      val p = Predicate.createInterpreted(BindReferences.bindReference(c, l.output ++ r.output))
-      p.initialize(0)
-      p
-    }
+    val condition = extra.map(bindPredicate(_, l.output ++ r.output))
     val joined = new JoinedRow
     /** A probe row and a build row as (left, right). */
     def pair(p: InternalRow, b: InternalRow): InternalRow =
@@ -301,13 +348,17 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
       else if (joinType == LeftAnti) probe.data.filterNot(p => matches(p).exists(passes(p, _)))
       else {
         val outer = joinType == LeftOuter || joinType == RightOuter
+        // each probe row's key matches, looked up by the sizing pass and
+        // reused by the building pass
+        val probed = new Array[collection.Seq[Built]](probe.data.size)
         /** Each output pair, in order: a probe row and a build row that
           * passes, or null for an outer join's unmatched probe row; stops
           * before the next probe row once `stop` holds. */
         def pairs(stop: => Boolean)(emit: (InternalRow, Built) => Unit): Unit =
-          probe.data.iterator.takeWhile(_ => !stop).foreach { p =>
+          probe.data.iterator.zipWithIndex.takeWhile(_ => !stop).foreach { case (p, i) =>
+            if (probed(i) == null) probed(i) = matches(p)
             var hit = false
-            matches(p).foreach(b => if (passes(p, b)) { hit = true; emit(p, b) })
+            probed(i).foreach(b => if (passes(p, b)) { hit = true; emit(p, b) })
             if (outer && !hit) emit(p, null)
           }
         // sum the output rows' heap bytes before building any: an output
@@ -327,13 +378,13 @@ object ClockSafeConvertToLocalRelation extends Rule[LogicalPlan] {
         }
         if (bytes > MaxJoinOutputBytes) return None
         // the output's nullability: the outer side's columns are nullable
-        val project = InterpretedUnsafeProjection.createProjection(
+        val project = UnsafeProjection.create(
           j.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
         val rows = mutable.ArrayBuffer[InternalRow]()
         pairs(false)((p, b) => rows += project(pair(p, if (b == null) nulls else b.row)).copy())
         joinRowsBuilt.add(rows.size)
         rows.toIndexedSeq
       }
-    Some(LocalRelation(j.output, out, l.isStreaming))
+    Some(LocalRelation(j.output, out))
   }
 }

@@ -16,8 +16,9 @@ private[graft] object QueryUtil {
     *  - `graft.barrier.mode=reliable` — `Dataset.checkpoint` into the
     *    configured `sc.setCheckpointDir` (HDFS/object store): survives
     *    executor loss; first action pays the extra checkpoint-write pass.
-    *  - `graft.barrier.mode=local` — lazy `localCheckpoint`: cheapest, the
-    *    r16 planning-cost win, fine where a lost executor only costs a rerun.
+    *  - `graft.barrier.mode=local` — `localCheckpoint(eager = false)`:
+    *    cheapest, the r16 planning-cost win, fine where a lost executor only
+    *    costs a rerun.
     *  - `auto` (default) — reliable when a checkpoint dir is configured on a
     *    NON-local master, local otherwise: a cluster deployment that sets
     *    `spark.checkpoint.dir` gets fault tolerance without code changes,
@@ -25,7 +26,15 @@ private[graft] object QueryUtil {
     *
     * Both forms return a LogicalRDD leaf, so the planning-cost truncation
     * (consumers analyze a one-node subtree) is identical; both preserve
-    * originStats for broadcast decisions. */
+    * originStats for broadcast decisions.
+    *
+    * Neither form is lazy under AQE, despite `eager = false`: building the
+    * checkpointed RDD executes the physical plan, and AQE materializes every
+    * stage but the last when it does. So the build of a query that makes a
+    * barrier runs Spark jobs before any action. First builds at sf0.001
+    * (R17OptimizationsSpec's eagerBuild test) ran d51 3 jobs, d52 3, d56 34,
+    * d81 7, d82 16, s60 15, s62 32, s68 2, s69 24, s72 25 and s83 2; a
+    * second build, with the barrier memoized, runs none. */
   private def barrier(s: SparkSession, df: DataFrame): DataFrame = {
     val reliable = s.conf.getOption("graft.barrier.mode").getOrElse("auto") match {
       case "reliable" => true

@@ -244,6 +244,34 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(g.cacheStats.entries == 1)
   }
 
+  test("texts over an untouched view are cached while a writer re-registers another view") {
+    val g = root.newSession()
+    g.registerTable("calm_t", local(10))
+    g.registerTable("busy_t", local(10))
+    // each compile of the texts below sleeps 60 ms in the analyzer, so
+    // every one of them overlaps a write to busy_t
+    g.spark.sessionState.functionRegistry.createOrReplaceTempFunction("slow_compile",
+      _ => PlanCacheSpec.WriteDuringCompile(() => Thread.sleep(60)), "scala_udf")
+    val texts = (0 until 4).map(i => s"SELECT max(v) + slow_compile() AS mx FROM calm_t WHERE v > $i")
+    val done = new AtomicBoolean(false)
+    val writes = new AtomicInteger
+    val writer = new Thread(() => while (!done.get()) {
+      g.registerTable("busy_t", local(10, writes.incrementAndGet().toLong))
+      Thread.sleep(25)
+    })
+    writer.start()
+    val mx = try texts.map(q => (1 to 3).map(_ => g.sql(q).rows.head.getLong(0))) finally {
+      done.set(true)
+      writer.join()
+    }
+    assert(mx.flatten.forall(_ == 10L))
+    assert(writes.get() >= 2 * texts.size, s"only ${writes.get()} writes")
+    val s = g.cacheStats
+    // each text: a first sighting, a miss that caches it, a frozen result
+    assert(s.entries == texts.size && s.misses == texts.size && s.resultHits == texts.size,
+      s"texts over an untouched view were not cached: $s")
+  }
+
   private def finalPlan(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.isFinalPlan

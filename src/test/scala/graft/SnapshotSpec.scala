@@ -7,13 +7,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, View}
+import org.apache.spark.sql.catalyst.plans.logical.View
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{col, rand, udf}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{DataTable, GraftSession}
+import graft.engine.{DataTable, DriverRelation, GraftSession}
 
 /** Driver snapshots of small file tables registered through the facade:
   * which registrations get one, when it is taken, what wins a race, and
@@ -57,7 +57,7 @@ class SnapshotSpec extends AnyFunSuite {
     g.spark.table(name).queryExecution.analyzed
 
   private def isSnapshot(g: GraftSession, name: String): Boolean =
-    stored(g, name).collectFirst { case l: LocalRelation => l }.nonEmpty &&
+    stored(g, name).collectFirst { case r: DriverRelation => r }.nonEmpty &&
       stored(g, name).collectFirst { case l: LogicalRelation => l }.isEmpty
 
   private def sorted(dt: DataTable): Seq[String] = dt.rows.map(_.toString).sorted

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Full local gate: tests + oracle correctness (BOTH SFs) + ×10 corpus gate
 # + growth-class gate + bench (sf0.1) + same-session DuckDB ratio.
-# Pass QUICK=1 to run only tests + sf0.01 verify.
+# Pass QUICK=1 to run only tests (sbt and perfbench) + sf0.01 verify.
 #
 # r14: every section now FAILS THE GATE (nonzero exit, summary at the end)
 # instead of just printing — the r13 VERDICT item 3 requirement that an x10
@@ -20,6 +20,14 @@ sbt -batch test > /tmp/gate_tests.log 2>&1
 TESTS_RC=$?   # sbt exits nonzero on any test failure
 grep -E "Tests:|Passed:|FAILED" /tmp/gate_tests.log
 section_result "tests" $TESTS_RC
+
+# the benchmark harness builds against the public GraftSession API, so a
+# facade change that breaks the harness build turns the gate red here
+echo "== perfbench harness tests =="
+python3 -m unittest discover -s perfbench/tests > /tmp/gate_perfbench_tests.log 2>&1
+PERFBENCH_RC=$?
+tail -n 3 /tmp/gate_perfbench_tests.log
+section_result "perfbench_tests" $PERFBENCH_RC
 
 # r15 (ADVICE r14): a Verify crash can no longer hide behind a green check —
 # the sbt exit status is captured (not |true-masked), the out dir is cleaned
