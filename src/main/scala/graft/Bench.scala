@@ -124,8 +124,8 @@ object Bench {
           time(spark.sql(microSql + s" /* $i */").collect())
         }.sum / 10 * 1000
         // the reference's whole regime: a cached aggregate over a registered
-        // in-memory table, answered on the driver with NO Spark job (the
-        // ClockSafeConvertToLocalRelation aggregate fold)
+        // in-memory table, answered on the calling thread with NO Spark job
+        // (a DirectPlanExec)
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(StructField("k", IntegerType),
@@ -135,8 +135,8 @@ object Bench {
         val memSql = "SELECT k, count(*) AS n, sum(v) AS s FROM bench_mem GROUP BY k"
         (1 to 3).foreach(_ => g.sql(memSql))
         val la = (1 to 30).map(_ => time(g.sql(memSql))).sum / 30 * 1000
-        // same regime with ORDER BY + LIMIT on top — stays job-free via the
-        // Sort fold (the reference-style ranked micro-query)
+        // same regime with ORDER BY + LIMIT on top — stays job-free in the
+        // same node (the reference-style ranked micro-query)
         val sortSql =
           "SELECT k, count(*) AS n FROM bench_mem GROUP BY k ORDER BY n DESC, k LIMIT 5"
         (1 to 3).foreach(_ => g.sql(sortSql))

@@ -135,14 +135,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // union-stream window instead of the pair explosion — AsofRuleSpec
     e.injectOptimizerRule(_ => graft.plans.AsofJoinRule)
     // replaces the excluded ConvertToLocalRelation with the clock-safe
-    // variant: driver-side local-relation folding (the reference's
-    // no-job fast path) without freezing Exec* clocks into cached plans.
-    // Injected rules run in this order within each optimizer iteration, so
-    // the two join rewrites above see a join of local relations before the
-    // fold's hash join could replace it.
+    // variant: Project/Filter/Limit over a LocalRelation fold without
+    // freezing Exec* clocks into cached plans
     e.injectOptimizerRule(_ => ClockSafeConvertToLocalRelation)
-    // the facade's driver-resident tables (DriverRelation) plan to a
-    // LocalTableScanExec, like a LocalRelation
-    e.injectPlannerStrategy(_ => DriverRelationStrategy)
+    // each optimized plan reads one version of every driver-resident table
+    e.injectOptimizerRule(_ => PinDriverRows)
+    // driver-resident subtrees (joins, aggregates and sorts over
+    // DriverRelations and LocalRelations) run on the calling thread, the
+    // reference's no-job fast path; the strategy sees the optimized plan,
+    // after the two join rewrites above
+    e.injectPlannerStrategy(_ => DirectPlanStrategy)
   }
 }

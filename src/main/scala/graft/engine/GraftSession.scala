@@ -13,10 +13,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec, ResultQueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
 
 /** The engine facade: the reference's session API (`sqlDirectly`,
@@ -30,11 +32,21 @@ import org.apache.spark.util.SizeEstimator
   *    tables and aliases; nested views and subqueries included).
   *    Re-registering a view drops only the entries that read that name, so
   *    a view that now shadows a persistent table reaches the plans that read
-  *    the table. This replaces the reference's lazy `NamedLocalRelation`
-  *    rebinding; commands (DDL, INSERT) issued through `sql` still drop
+  *    the table; commands (DDL, INSERT) issued through `sql` still drop
   *    every entry. A compile that overlaps a write to a name it read, or a
   *    command, is used once but not cached; writes to other names do not
   *    keep it out.
+  *  - The one exception is the reference's lazy `NamedLocalRelation`
+  *    rebinding: re-registering a `DataTable` under a name whose `DataTable`
+  *    registration the catalog still holds, with the same schema (names,
+  *    types, nullability), publishes the rows as a new version of the same
+  *    table (`DriverSlot`). The entries that read the name (directly or
+  *    through a view) and run on the calling thread keep their plan and
+  *    lose only their frozen rows; each execution reads the version current
+  *    when it starts, once per table, so a self-join sees one version. Every
+  *    other re-registration takes the path above: a changed schema, a
+  *    DataFrame, a driver snapshot swapped in, or a view replaced by a
+  *    command.
   *  - A text is cached only the second time it is seen, so one-off texts pin
   *    nothing. A first sighting keeps a weak handle on its DataFrame, which
   *    the second sighting adopts if it is still alive and no command and no
@@ -45,7 +57,9 @@ import org.apache.spark.util.SizeEstimator
   *    final plan reads only materialized exchange stages or local tables.
   *    Later `sql` calls return those rows without a Spark job, and the
   *    executed plan's broadcast relations and shuffle stages are released;
-  *    `sqlDF` gets a DataFrame over the analyzed plan, built on demand.
+  *    `sqlDF` gets a DataFrame over the analyzed plan, built on demand. Rows
+  *    computed from a table version that was replaced during the execution
+  *    are not frozen.
   *    Frozen rows are bounded per entry and in total; a larger result, or a
   *    plan that fails the test, keeps re-running its executed plan (the AQE
   *    stages it materialized are reused).
@@ -79,19 +93,21 @@ import org.apache.spark.util.SizeEstimator
   *    (`MaxSnapshotBytes`, `MaxSnapshotsBytes`); a table over a bound keeps
   *    its live view. A `DataTable` registered through
   *    `registerTable(name, table)` is held in a `DriverRelation` at once.
-  *    That leaf keeps its rows out of Catalyst's expression walks: the
-  *    optimizer's rules no longer visit every row of a snapshot in each
-  *    iteration, and only the folds read them. Reads over snapshots and
-  *    registered `DataTable`s fold to driver-side relations
-  *    (ClockSafeConvertToLocalRelation, joins included) and run no Spark
-  *    job; the folds use generated code only where it cannot inline a
-  *    literal of the query text, so an ad-hoc text that differs from an
-  *    earlier one only in a literal compiles nothing.
+  *    That leaf keeps its rows out of Catalyst's expression walks, and
+  *    names a version slot rather than rows. A plan over snapshots and
+  *    registered `DataTable`s whose operators are projections, filters,
+  *    equi-joins, aggregates, sorts and limits runs on the calling thread as
+  *    one `DirectPlanExec` (the reference's `DirectPlan`): `sql` runs it
+  *    directly, with no Spark job and without Spark's action wrapper. It
+  *    uses generated code only where that cannot inline a literal of the
+  *    query text, so an ad-hoc text that differs from an earlier one only in
+  *    a literal compiles nothing.
   *  - Executions of everything else are plain Spark jobs: thread-safe,
-  *    spill-aware, distributed. No unbounded build-side memory (the
-  *    reference's `Long.MaxValue` `StaticMemoryManager` hash joins are the
-  *    documented anti-pattern): a folded join declines past a fixed output
-  *    bound.
+  *    spill-aware, distributed. `executeAndRegister` keeps its Spark job
+  *    even over driver tables. A calling-thread plan holds on the driver
+  *    what its operators must hold (a join's hash table over its build
+  *    side, an aggregate's groups, a sort's rows), with no bound of its own;
+  *    rows between operators stream.
   */
 class GraftSession private (val spark: SparkSession) {
   import GraftSession._
@@ -137,6 +153,10 @@ class GraftSession private (val spark: SparkSession) {
     * `views`. */
   private val snapshots = new java.util.HashMap[String, java.lang.Long]()
   private var snapshotBytes = 0L
+  /** The `DataTable`s registered through the facade, by view key, while the
+    * catalog still holds the view their registration created; guarded by
+    * `views`. */
+  private val tables = new java.util.HashMap[String, Bound]()
 
   /** `db.table` temp-view names, like the reference's directTempViews
     * namespace (reference `DirectSessionCatalog.scala:130-171`), via
@@ -312,15 +332,44 @@ class GraftSession private (val spark: SparkSession) {
     }
 
   /** Drop the entries that read `view`, directly or through another view. */
-  private def invalidate(view: String): Unit = lock.synchronized {
+  private def invalidate(view: String): Unit = noteWrite(view, _ => false)
+
+  /** Publish `rows` as the new version of the table in `slot` (view key
+    * `view`). The entries that read it and run on the calling thread, or
+    * are planned afresh on every call, stay cached: each execution reads the
+    * slot, so only their frozen rows and lent DataFrames (which read the old
+    * version) are dropped. Every other entry that reads it is dropped. */
+  private def rebind(view: String, slot: DriverSlot, rows: DriverRows): Unit = lock.synchronized {
+    slot.publish(rows)
+    noteWrite(view, e => e.direct != null || e.clock)
+  }
+
+  /** Record a write to `view`: a compile that overlapped it is not cached.
+    * Of the entries that read `view`, those `keep` holds lose their frozen
+    * rows; the others are dropped. */
+  private def noteWrite(view: String, keep: Entry => Boolean): Unit = lock.synchronized {
     writeSeq += 1
     written.put(view, writeSeq)
     if (written.size > MaxWrittenNames) { written.clear(); writtenFloor = writeSeq }
     val it = cache.values.iterator
     while (it.hasNext) {
       val e = it.next()
-      if (e.deps.contains(view)) { it.remove(); drop(e); counters.invalidated.increment() }
+      if (e.deps.contains(view)) {
+        if (keep(e)) { thaw(e); counters.rebinds.increment() }
+        else { it.remove(); drop(e); counters.invalidated.increment() }
+      }
     }
+  }
+
+  /** Let a kept entry go of its frozen rows and of any DataFrame it lent. */
+  private def thaw(e: Entry): Unit = {
+    if (e.state == Frozen) {
+      frozenBytes -= e.bytes
+      e.result = null
+      e.bytes = 0L
+      e.state = Pending
+    }
+    release(e)
   }
 
   private def invalidateAll(): Unit = lock.synchronized {
@@ -333,19 +382,61 @@ class GraftSession private (val spark: SparkSession) {
 
   /** Run `sqlText` with a frozen per-execution clock and collect it: from
     * frozen rows when the text's entry holds them, else over its cached
-    * plan (parse/analyze/optimize/plan skipped), else compiled afresh. */
+    * plan (parse/analyze/optimize/plan skipped), else compiled afresh. A
+    * plan whose root is a `DirectPlanExec` is run by that node on this
+    * thread, over the current version of each driver table it reads, with
+    * no Spark job and without Spark's action wrapper. */
   def sql(sqlText: String): DataTable = {
     val l = lookup(sqlText)
-    val frozen = if (l.entry == null) null else l.entry.result
+    val e = l.entry
+    val frozen = if (e == null) null else e.result
     if (frozen != null) { counters.resultHits.increment(); frozen }
     else {
       counters.count(l.outcome)
+      val direct = if (e != null && e.direct != null) e.direct else directRoot(e, l.df)
       GraftExecutionContext.begin(spark)
-      val result =
-        try DataTable(l.df.schema, l.df.collect().toSeq)
-        finally GraftExecutionContext.end(spark)
-      if (l.entry != null && l.entry.state == Pending) settle(l.entry, l.df, result)
-      result
+      try {
+        if (direct != null) {
+          val run = direct.collectLive()
+          counters.driverRuns.increment()
+          // the analyzed schema, as the Spark path returns: optimization may
+          // have changed the nullability of the plan's output
+          val result = DataTable(if (e != null) e.analyzed.schema else l.df.schema, run.rows)
+          if (e != null && e.state == Pending) settleDirect(e, result, run.read)
+          result
+        } else {
+          val result = DataTable(l.df.schema, l.df.collect().toSeq)
+          if (e != null && e.state == Pending) settle(e, l.df, result)
+          result
+        }
+      } finally GraftExecutionContext.end(spark)
+    }
+  }
+
+  /** The `DirectPlanExec` at the root of `df`'s executed plan, or null. An
+    * entry `e` that runs it keeps the node and lets go of `df` (the node
+    * binds its tables' rows when it runs, so it outlives a rebind); a text
+    * with a clock expression is planned afresh on every call instead. */
+  private def directRoot(e: Entry, df: DataFrame): DirectPlanExec =
+    if (df.isStreaming) null
+    else df.queryExecution.executedPlan match {
+      case d: DirectPlanExec =>
+        if (e != null && !e.clock) lock.synchronized {
+          if (e.direct == null && (cache.get(e.text) eq e)) { e.direct = d; release(e) }
+        }
+        d
+      case _ => null
+    }
+
+  /** Freeze the rows of a calling-thread execution of `e`, unless a newer
+    * version of a table it read was published meanwhile: a freeze that
+    * lost that race is not served. */
+  private def settleDirect(e: Entry, result: DataTable, read: Seq[(DriverSlot, DriverRows)]): Unit = {
+    val bytes = SizeEstimator.estimate(result.rows)
+    lock.synchronized {
+      if (read.forall { case (slot, rows) => slot.current eq rows }) {
+        if (bytes <= MaxFrozenEntryBytes) freeze(e, result, bytes) else pin(e)
+      }
     }
   }
 
@@ -364,26 +455,48 @@ class GraftSession private (val spark: SparkSession) {
     lock.synchronized(counters.snapshot(cache.size, heldPlans, frozenBytes))
 
   /** Register `table`'s rows as the temp view `name`, held on the driver
-    * in a `DriverRelation`. */
-  def registerTable(name: String, table: DataTable): Unit =
-    registerTable(name,
-      DatasetBridge.ofRows(spark, DriverRelation.fromRows(table.schema, table.rows)))
+    * in a `DriverRelation`. Over a `DataTable` registered here under the
+    * same name with the same schema (names, types, nullability), whose view
+    * the catalog still holds, the rows are published as a new version of
+    * the same table: the cached plans that read it are kept, and only their
+    * frozen rows are dropped (see `rebind`). */
+  def registerTable(name: String, table: DataTable): Unit = {
+    val view = mangle(name)
+    val key = viewKey(view)
+    val rows = DriverRows.of(table.schema, table.rows)
+    views.synchronized {
+      val b = tables.get(key)
+      if (b != null && b.schema == table.schema &&
+          DatasetBridge.tempView(spark, view).exists(_ eq b.registered)) rebind(key, b.slot, rows)
+      else {
+        val slot = new DriverSlot(rows)
+        replaceView(view, key,
+          DatasetBridge.ofRows(spark, DriverRelation(DataTypeUtils.toAttributes(table.schema), slot)),
+          candidate = false)
+        tables.put(key, Bound(table.schema, slot, DatasetBridge.tempView(spark, view).orNull))
+      }
+    }
+  }
 
   /** Register `df` as the temp view `name`. A small file table becomes a
     * driver snapshot on the first facade read that needs it (see
     * `snapshotCandidate`); registration itself runs no Spark job. */
   def registerTable(name: String, df: DataFrame): Unit = {
     val view = mangle(name)
-    val key = viewKey(view)
     val candidate = snapshotCandidate(df)
-    views.synchronized {
-      df.createOrReplaceTempView(view)
-      val old = snapshots.remove(key)
-      if (old != null) snapshotBytes -= old
-      if (candidate) pending.put(key, new Pending(key, view, df, DatasetBridge.tempView(spark, view).orNull))
-      else pending.remove(key)
-      invalidate(key)
-    }
+    views.synchronized(replaceView(view, viewKey(view), df, candidate))
+  }
+
+  /** Make `df` the temp view `view` (key `key`) and drop the plans that read
+    * it. Guarded by `views`. */
+  private def replaceView(view: String, key: String, df: DataFrame, candidate: Boolean): Unit = {
+    df.createOrReplaceTempView(view)
+    val old = snapshots.remove(key)
+    if (old != null) snapshotBytes -= old
+    tables.remove(key)
+    if (candidate) pending.put(key, new Pending(key, view, df, DatasetBridge.tempView(spark, view).orNull))
+    else pending.remove(key)
+    invalidate(key)
   }
 
   def table(name: String): DataTable = {
@@ -450,7 +563,7 @@ class GraftSession private (val spark: SparkSession) {
             snapshotBytes + bytes <= MaxSnapshotsBytes) {
           val attrs = p.df.queryExecution.analyzed.output
             .map(a => AttributeReference(a.name, a.dataType, a.nullable, a.metadata)())
-          val snapshot = DriverRelation(attrs, new DriverRows(ArraySeq.unsafeWrapArray(rows)))
+          val snapshot = DriverRelation(attrs, new DriverSlot(new DriverRows(ArraySeq.unsafeWrapArray(rows))))
           DatasetBridge.ofRows(spark, snapshot).createOrReplaceTempView(p.view)
           snapshots.put(p.key, bytes)
           snapshotBytes += bytes
@@ -533,7 +646,13 @@ object GraftSession {
     @volatile var state: State = if (clock) Replanned else Pending
     @volatile var result: DataTable = null
     var bytes = 0L
+    /** The executed plan's root when it runs on the calling thread. */
+    @volatile var direct: DirectPlanExec = null
   }
+
+  /** A `DataTable` registration: its schema, the slot its versions are
+    * published to, and the catalog's definition of the view it created. */
+  private final case class Bound(schema: StructType, slot: DriverSlot, registered: AnyRef)
 
   /** A text seen but not cached: a weak handle on the DataFrame its first
     * compile built (null once it left the cache), the write number when
@@ -570,15 +689,20 @@ object GraftSession {
     * `invalidated` counts entries dropped by a write to a name they read or
     * by a command, `evictions` entries dropped by a bound; `entries`,
     * `heldPlans` (entries holding a DataFrame that may have run) and
-    * `frozenBytes` are the cache's current size. */
+    * `frozenBytes` are the cache's current size. `driverRuns` counts the
+    * `sql` calls (of `planHits`, `misses`, `firstSightings` or
+    * `clockReplans`) that a `DirectPlanExec` answered on the calling thread
+    * with no Spark job; `rebinds` counts cached entries kept across a
+    * re-registration of a `DataTable` with the same schema (each lost only
+    * its frozen rows). */
   final case class CacheStats(resultHits: Long, planHits: Long, misses: Long,
       firstSightings: Long, commands: Long, clockReplans: Long,
       invalidated: Long, evictions: Long, entries: Int, heldPlans: Int,
-      frozenBytes: Long)
+      frozenBytes: Long, driverRuns: Long = 0L, rebinds: Long = 0L)
 
   private final class Counters {
     val resultHits, planHits, misses, firstSightings, commands, clockReplans,
-      invalidated, evictions = new LongAdder
+      invalidated, evictions, driverRuns, rebinds = new LongAdder
 
     def count(o: Outcome): Unit = (o match {
       case Hit => planHits
@@ -590,7 +714,8 @@ object GraftSession {
 
     def snapshot(entries: Int, heldPlans: Int, frozenBytes: Long): CacheStats = CacheStats(
       resultHits.sum, planHits.sum, misses.sum, firstSightings.sum, commands.sum,
-      clockReplans.sum, invalidated.sum, evictions.sum, entries, heldPlans, frozenBytes)
+      clockReplans.sum, invalidated.sum, evictions.sum, entries, heldPlans, frozenBytes,
+      driverRuns.sum, rebinds.sum)
   }
 
   /** True when running the executed plan `p` again could only repeat its
@@ -704,7 +829,7 @@ object GraftSession {
     * for driver-resident tables is added when it is missing). */
   def apply(spark: SparkSession): GraftSession = {
     ensureClockSafety(spark)
-    DatasetBridge.ensureStrategy(spark, DriverRelationStrategy)
+    DatasetBridge.ensurePlanning(spark, DirectPlanStrategy, PinDriverRows)
     facadeFor(spark)
   }
 }

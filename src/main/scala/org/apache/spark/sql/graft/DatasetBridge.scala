@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SQLExecution, SparkStrategy}
 
 /** `Dataset.ofRows` (a DataFrame over an already-analyzed plan, with a fresh
@@ -28,11 +29,14 @@ object DatasetBridge {
   def tempView(spark: SparkSession, name: String): Option[AnyRef] =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
 
-  /** Add `strategy` to the planner of `spark` unless it has it already (a
-    * session built without the extensions that inject it). */
-  def ensureStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
+  /** Add `strategy` to the planner of `spark`, and `rule` to its optimizer,
+    * unless the planner has the strategy already (a session built without
+    * the extensions that inject both). */
+  def ensurePlanning(spark: SparkSession, strategy: SparkStrategy, rule: Rule[LogicalPlan]): Unit = {
     val c = spark.asInstanceOf[classic.SparkSession]
-    if (!c.sessionState.planner.strategies.contains(strategy))
+    if (!c.sessionState.planner.strategies.contains(strategy)) {
       c.experimental.extraStrategies = c.experimental.extraStrategies :+ strategy
+      c.experimental.extraOptimizations = c.experimental.extraOptimizations :+ rule
+    }
   }
 }

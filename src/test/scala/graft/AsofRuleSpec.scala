@@ -228,9 +228,10 @@ class AsofRuleSpec extends AnyFunSuite {
   }
 
   test("local inputs on a session with GraftExtensions: the rewrite fires before the join fold") {
-    // GraftExtensions also folds a join of two local relations on the
-    // driver; the as-of rewrite must see the idiom's join first, or the
-    // pair explosion is built on the driver and still ranked by a window
+    // GraftExtensions also runs a join of two local relations on the
+    // calling thread (DirectPlanStrategy, planned from the optimized plan);
+    // the as-of rewrite must replace the idiom's join first, or the pair
+    // explosion is built on the driver and still ranked by a window
     val g = keepingSessions(SparkSession.builder()
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")

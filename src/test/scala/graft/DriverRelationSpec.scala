@@ -8,19 +8,20 @@ import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{DataTable, DriverRelation, GraftSession}
+import graft.engine.{DataTable, DirectPlanExec, DriverRelation, GraftSession}
 
 /** The facade's driver-resident tables (`DriverRelation`): registered
   * `DataTable`s and driver snapshots of small parquet tables. Reads over them
   * equal the same reads over live parquet views, ad-hoc texts that differ
-  * only in a literal compile no generated class, and plans that do not fold
-  * run on `LocalTableScanExec`. Each test runs on its own child session. */
+  * only in a literal compile no generated class, and Spark plans over them
+  * scan them with `LocalTableScanExec`. Each test runs on its own child
+  * session. */
 class DriverRelationSpec extends AnyFunSuite {
 
   private lazy val root: GraftSession = GraftSession.builder()
@@ -129,11 +130,11 @@ class DriverRelationSpec extends AnyFunSuite {
       "WHERE a.o_totalprice > 900 GROUP BY a.o_custkey"
     assert(sorted(g.sql(self)) == live(g, self))
     assert(isDriverTable(g, "orders"))
-    val folded = g.sqlDF(self).queryExecution.optimizedPlan
-    assert(folded.isInstanceOf[LocalRelation], s"the self-join did not fold:\n$folded")
+    val folded = g.sqlDF(self).queryExecution.executedPlan
+    assert(folded.isInstanceOf[DirectPlanExec], s"the self-join did not run on the calling thread:\n$folded")
 
-    // a full outer join does not fold: Spark joins the two driver tables,
-    // each scanned by a LocalTableScanExec
+    // a full outer join does not run on the calling thread: Spark joins the
+    // two driver tables, each scanned by a LocalTableScanExec
     val full = "SELECT c.c_custkey, m.k, m.v FROM customer c FULL OUTER JOIN mem_t m " +
       "ON c.c_custkey = m.k + 280"
     assert(sorted(g.sql(full)) == live(g, full))
@@ -144,20 +145,6 @@ class DriverRelationSpec extends AnyFunSuite {
       case s: LocalTableScanExec => s
     }
     assert(scans.size == 2, s"expected two local table scans:\n${df.queryExecution.executedPlan}")
-  }
-
-  test("a join over the fold's output bound runs as a Spark join over the driver tables") {
-    val g = root.newSession()
-    val schema = StructType(Seq(StructField("k", IntegerType), StructField("v", LongType)))
-    // 1100 x 1100 rows on one key: 1.21 M output rows, over the 16 MB bound
-    val one = (1 to 1100).map(i => Row(1, i.toLong))
-    g.registerTable("l", DataTable(schema, one))
-    g.registerTable("r", DataTable(schema, one))
-    val q = "SELECT count(*) AS n, sum(l.v + r.v) AS s FROM l JOIN r ON l.k = r.k"
-    assert(g.sqlDF(q).queryExecution.optimizedPlan.exists(_.isInstanceOf[Join]))
-    val (jobs, rows) = jobsDuring(g)(g.sql(q).rows.map(_.toString))
-    assert(rows == Seq(s"[1210000,${2L * 1100 * (1100 * 1101 / 2)}]"))
-    assert(jobs > 0, "the bounded join ran no Spark job")
   }
 
   test("executeAndRegister over a snapshot and a DataTable") {
@@ -181,11 +168,13 @@ class DriverRelationSpec extends AnyFunSuite {
     Thread.sleep(15)
     val t3 = ts()
     assert(t2 > t1 && t3 > t2, s"a clock read of a DataTable was frozen: $t1, $t2, $t3")
-    val folded = g.sqlDF(clock).queryExecution.optimizedPlan
-    assert(!folded.isInstanceOf[LocalRelation], s"a clock aggregate was folded:\n$folded")
+    // the clock aggregate runs on the calling thread and reads the clock of
+    // each execution, not one bound into the cached plan
+    val clocked = g.sqlDF(clock).queryExecution.executedPlan
+    assert(clocked.isInstanceOf[DirectPlanExec], s"a clock aggregate is not a calling-thread plan:\n$clocked")
 
     // rand(7) over the same rows as a LocalRelation: the same values; the
-    // plan is not folded and its rows are never frozen
+    // plan stays a Spark plan and its rows are never frozen
     val rnd = "SELECT k, g, v, rand(7) AS r FROM mem_t"
     val before = g.cacheStats
     val runs = (1 to 3).map(_ => g.sql(rnd).rows.map(_.toString))
@@ -193,7 +182,7 @@ class DriverRelationSpec extends AnyFunSuite {
     val stock = g.spark.sql(rnd.replace("mem_t", "mem_local")).collect().map(_.toString).toSeq
     assert(runs.forall(_ == stock), "rand(7) over a DataTable differs from Spark's")
     assert(g.cacheStats.resultHits == before.resultHits, "a rand() read was frozen")
-    assert(!g.sqlDF(rnd).queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(!g.sqlDF(rnd).queryExecution.executedPlan.exists(_.isInstanceOf[DirectPlanExec]))
   }
 
   test("a DataTable registered on a session built without GraftExtensions is planned") {

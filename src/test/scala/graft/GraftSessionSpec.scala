@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{DataTable, GraftSession}
+import graft.engine.{DataTable, DirectPlanExec, GraftSession}
 
 /** Facade parity specs mirroring the reference's DirectExecSuite method:
   * differential testing of the cached-plan path against direct spark.sql on
@@ -28,8 +28,8 @@ class GraftSessionSpec extends AnyFunSuite {
     s.registerTable("people2", DataTable(schema, Seq(
       Row("a", 1, 0), Row("b", 2, 1), Row("c", 3, 0))))
     // the rows of people2, computed from `range`: a join of two DataTables
-    // (driver-resident LocalRelations) folds on the driver and runs no Spark
-    // job, while a join with this one plans a real join
+    // (driver-resident) runs on the calling thread with no Spark job, while a
+    // join with this one plans a real join
     s.registerTable("people2_live", s.spark.range(3).selectExpr("char(97 + id) AS name",
       "CAST(id + 1 AS INT) AS age", "CAST(id % 2 AS INT) AS genda"))
     s
@@ -149,29 +149,42 @@ class GraftSessionSpec extends AnyFunSuite {
   test("local-relation fast path: project/filter/limit fold to a driver-side LocalRelation") {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     // the reference's regime: a small in-memory table answered without a
-    // Spark job. ClockSafeConvertToLocalRelation must fold these plans to a
-    // bare LocalRelation (collect on which never submits a job).
-    val folded = g.sqlDF(
-      "SELECT upper(name) AS n, age + 1 AS a FROM people WHERE age >= 3 LIMIT 2")
+    // Spark job. ClockSafeConvertToLocalRelation must fold these plans over
+    // a LocalRelation to a bare LocalRelation (collect on which never
+    // submits a job); over a registered DataTable they run on the calling
+    // thread in a DirectPlanExec, which binds the table's rows when it runs
+    val schema = g.spark.table("people").schema
+    g.spark.createDataFrame(g.sql("SELECT * FROM people").rows.asJava, schema)
+      .createOrReplaceTempView("people_local")
+    val text = "SELECT upper(name) AS n, age + 1 AS a FROM people WHERE age >= 3 LIMIT 2"
+    val folded = g.sqlDF(text.replace("people", "people_local"))
     assert(folded.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       s"expected LocalRelation, got:\n${folded.queryExecution.optimizedPlan}")
+    val direct = g.sqlDF(text).queryExecution.executedPlan
+    assert(direct.isInstanceOf[DirectPlanExec], s"expected DirectPlanExec, got:\n$direct")
     assert(g.sql("SELECT upper(name) AS n FROM people WHERE age >= 3").rows.size == 3)
-    // clock expressions must NOT fold — they'd freeze into the cached plan
-    val clocked = g.sqlDF("SELECT name, current_timestamp() AS ts FROM people")
+    assert(g.sql("SELECT upper(name) AS n FROM people_local WHERE age >= 3").rows.size == 3)
+    // clock expressions must NOT fold — they'd freeze into the cached plan;
+    // the calling-thread plan evaluates them at execution
+    val clocked = g.sqlDF("SELECT name, current_timestamp() AS ts FROM people_local")
     assert(!clocked.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       "clock expression was folded into a LocalRelation — frozen clock bug")
+    assert(g.sqlDF("SELECT name, current_timestamp() AS ts FROM people")
+      .queryExecution.executedPlan.isInstanceOf[DirectPlanExec])
     // non-deterministic expressions keep per-execution semantics too
-    val random = g.sqlDF("SELECT name, rand() AS r FROM people")
+    val random = g.sqlDF("SELECT name, rand() AS r FROM people_local")
     assert(!random.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       "rand() was folded — cached plan would replay identical values")
+    assert(!g.sqlDF("SELECT name, rand() AS r FROM people")
+      .queryExecution.executedPlan.exists(_.isInstanceOf[DirectPlanExec]),
+      "rand() ran on the calling thread")
   }
 
   test("local-relation fast path: small aggregates fold driver-side (reference testAgg regime)") {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     def foldsTo[T](sql: String): Boolean =
-      g.sqlDF(sql).queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-    // grouped + global aggregates fold to a bare LocalRelation (no job) and
-    // the folded values match direct spark.sql (differential covers values)
+      g.sqlDF(sql).queryExecution.executedPlan.isInstanceOf[DirectPlanExec]
+    // grouped + global aggregates run on the calling thread (no job) and
+    // their values match direct spark.sql (differential covers values)
     val grouped = "SELECT age, count(*) AS n, sum(genda) AS s, avg(age) + 1 AS a FROM people GROUP BY age"
     assert(foldsTo(grouped), s"grouped aggregate did not fold:\n${g.sqlDF(grouped).queryExecution.optimizedPlan}")
     differential(grouped)
@@ -195,30 +208,37 @@ class GraftSessionSpec extends AnyFunSuite {
     val imperative = "SELECT age, collect_list(name) AS xs FROM people GROUP BY age"
     assert(!foldsTo(imperative), "imperative (ObjectHashAggregate) function must not fold")
     // (non-deterministic aggregate inputs are rejected by the analyzer
-    // itself, so the determinism guard's reachable case is the clock)
+    // itself.) A clock aggregate runs on the calling thread too, and reads
+    // the clock of each execution: it is never frozen into the plan
     val clocked = "SELECT max(current_timestamp()) AS ts FROM people"
-    assert(!foldsTo(clocked), "clock expression folded into a cached aggregate")
+    assert(foldsTo(clocked))
+    val t1 = g.sql(clocked).rows.head.getTimestamp(0)
+    Thread.sleep(15)
+    val t2 = g.sql(clocked).rows.head.getTimestamp(0)
+    assert(t2.after(t1), s"clock frozen into a cached aggregate: $t1, $t2")
   }
 
   test("ORDER BY (and LIMIT) over a folded aggregate stays job-free and correctly ordered") {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    // reference-style micro-query: GROUP BY + ORDER BY + LIMIT, all folded
+    def onDriver(sql: String): Boolean =
+      g.sqlDF(sql).queryExecution.executedPlan.isInstanceOf[DirectPlanExec]
+    // reference-style micro-query: GROUP BY + ORDER BY + LIMIT, all on the
+    // calling thread
     val q = "SELECT age, count(*) AS n FROM people GROUP BY age ORDER BY n DESC, age LIMIT 2"
-    assert(g.sqlDF(q).queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
-      s"ORDER BY over folded aggregate did not fold:\n${g.sqlDF(q).queryExecution.optimizedPlan}")
+    assert(onDriver(q),
+      s"ORDER BY over the aggregate is not a calling-thread plan:\n${g.sqlDF(q).queryExecution.executedPlan}")
     // ORDER-SENSITIVE comparison (the differential helper sorts rows away)
     val direct = g.spark.sql(q).collect().map(_.toString).toSeq
     assert(g.sql(q).rows.map(_.toString) == direct)
     assert(g.sql(q).rows.map(_.toString) == direct, "second (cached) run")
     // nulls + direction semantics match the distributed sort
     val qn = "SELECT nullif(name, 'c') AS k FROM people ORDER BY k DESC NULLS LAST"
-    assert(g.sqlDF(qn).queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(onDriver(qn))
     assert(g.sql(qn).rows.map(_.toString) ==
       g.spark.sql(qn).collect().map(_.toString).toSeq)
-    // a non-deterministic sort key keeps per-execution semantics: no fold
+    // a non-deterministic sort key keeps per-execution semantics: a Spark plan
     val qr = "SELECT name FROM people ORDER BY rand()"
-    assert(!g.sqlDF(qr).queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
-      "rand() sort key was folded — cached plan would replay one shuffle order")
+    assert(!g.sqlDF(qr).queryExecution.executedPlan.exists(_.isInstanceOf[DirectPlanExec]),
+      "rand() sort key ran on the calling thread — it must keep Spark's per-execution values")
   }
 
   test("folded facade queries submit ZERO Spark jobs (listener-counted regression gate)") {
@@ -259,18 +279,18 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("aggregate fold normalizes floating-point grouping keys (-0.0/NaN parity with distributed)") {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    // The fold groups on raw UnsafeRow key bytes and runs before the
-    // optimizer's NormalizeFloatingNumbers batch: without its own
-    // normalization, -0.0 vs 0.0 and differing NaN bit patterns split into
-    // separate groups while the distributed path unifies them.
+    def onDriver(sql: String): Boolean =
+      g.sqlDF(sql).queryExecution.executedPlan.isInstanceOf[DirectPlanExec]
+    // The calling-thread aggregate groups on raw UnsafeRow key bytes:
+    // without its own normalization, -0.0 vs 0.0 and differing NaN bit
+    // patterns split into separate groups while the distributed path
+    // unifies them.
     val nanPayload = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
     g.registerTable("fpk", DataTable(
       StructType(Seq(StructField("k", DoubleType), StructField("v", IntegerType))),
       Seq(Row(0.0d, 1), Row(-0.0d, 2), Row(Double.NaN, 3), Row(nanPayload, 4))))
     val q = "SELECT k, count(*) AS n, sum(v) AS s FROM fpk GROUP BY k"
-    assert(g.sqlDF(q).queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
-      "double-keyed aggregate should still fold (with normalized keys)")
+    assert(onDriver(q), "double-keyed aggregate should still run on the driver (with normalized keys)")
     assert(g.sql(q).rows.size == 2, "expected exactly {0.0, NaN} after normalization")
     differential(q)
     // float keys take the same normalization path
@@ -281,13 +301,13 @@ class GraftSessionSpec extends AnyFunSuite {
     val qf = "SELECT k, count(*) AS n FROM fpkf GROUP BY k"
     assert(g.sql(qf).rows.size == 2)
     differential(qf)
-    // floats nested inside a struct key are not normalized — must not fold
+    // floats nested inside a struct key are not normalized — must stay a Spark plan
     g.registerTable("fpks", DataTable(
       StructType(Seq(StructField("s",
         StructType(Seq(StructField("d", DoubleType)))))),
       Seq(Row(Row(0.0d)), Row(Row(-0.0d)))))
     val qs = "SELECT s, count(*) AS n FROM fpks GROUP BY s"
-    assert(!g.sqlDF(qs).queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+    assert(!g.sqlDF(qs).queryExecution.executedPlan.exists(_.isInstanceOf[DirectPlanExec]),
       "struct-of-double key must fall back to the distributed path")
     differential(qs)
   }

@@ -3,16 +3,15 @@ package graft
 import scala.util.Random
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClockSafeConvertToLocalRelation, DataTable, GraftSession}
+import graft.engine.{DataTable, DirectPlan, DirectPlanExec, GraftSession}
 
-/** The driver-side hash join of `ClockSafeConvertToLocalRelation`: a join of
-  * two registered `DataTable`s (LocalRelations) folds, and its rows equal
-  * those of the same query over parquet copies of the inputs, which Spark
-  * joins. Each test runs on its own child session. */
+/** The hash join of `DirectPlanExec`: a join of two registered `DataTable`s
+  * runs on the calling thread, and its rows equal those of the same query
+  * over parquet copies of the inputs, which Spark joins. Each test runs on
+  * its own child session. */
 class JoinFoldSpec extends AnyFunSuite {
 
   private lazy val root: GraftSession = GraftSession.builder()
@@ -44,21 +43,21 @@ class JoinFoldSpec extends AnyFunSuite {
   private def rows(g: GraftSession, q: String): Seq[String] =
     g.spark.sql(q).collect().map(_.toString).toSeq.sorted
 
-  private def plan(g: GraftSession, q: String): LogicalPlan =
-    g.spark.sql(q).queryExecution.optimizedPlan
+  /** True when `q`'s executed plan is one `DirectPlanExec`. */
+  private def direct(g: GraftSession, q: String): Boolean =
+    g.spark.sql(q).queryExecution.executedPlan.isInstanceOf[DirectPlanExec]
 
   /** `q`, written `FROM l <join> r ON ...`, over the parquet copies. */
   private def parquet(q: String): String =
     q.replace("FROM l ", "FROM lp l ").replace(" r ON ", " rp r ON ")
 
-  /** `q` (over `l` and `r`) folds to a LocalRelation and returns the rows of
-    * the same query over the parquet copies. */
+  /** `q` (over `l` and `r`) runs on the calling thread and returns the rows
+    * of the same query over the parquet copies. */
   private def assertFolds(g: GraftSession, q: String): Unit = {
-    val p = plan(g, q)
-    assert(p.isInstanceOf[LocalRelation], s"not folded: $q\n$p")
+    assert(direct(g, q), s"not run on the calling thread: $q\n${g.spark.sql(q).queryExecution.executedPlan}")
     val overParquet = parquet(q)
-    assert(!plan(g, overParquet).isInstanceOf[LocalRelation])
-    assert(rows(g, q) == rows(g, overParquet), s"folded join differs from Spark's: $q")
+    assert(!direct(g, overParquet))
+    assert(rows(g, q) == rows(g, overParquet), s"driver-side join differs from Spark's: $q")
   }
 
   private val joins = Seq("JOIN", "LEFT JOIN", "RIGHT JOIN", "LEFT SEMI JOIN", "LEFT ANTI JOIN")
@@ -90,12 +89,12 @@ class JoinFoldSpec extends AnyFunSuite {
     val g = session(l, r)
     joins.foreach(j => assertFolds(g, s"${select(j)} FROM l $j r ON l.d = r.d"))
     val nested = s"${select("JOIN")} FROM l JOIN r ON named_struct('d', l.d) = named_struct('d', r.d)"
-    assert(plan(g, nested).exists(_.isInstanceOf[Join]), "a nested double key was folded")
+    assert(!direct(g, nested), "a nested double key was joined on the driver")
     assert(rows(g, nested) == rows(g, parquet(nested)))
     // a collation whose equal strings have different bytes declines too
     val collated = s"${select("JOIN")} FROM l JOIN r ON " +
       "concat('A', l.k) COLLATE UTF8_LCASE = concat('a', r.k) COLLATE UTF8_LCASE"
-    assert(plan(g, collated).exists(_.isInstanceOf[Join]), "a case-insensitive key was folded")
+    assert(!direct(g, collated), "a case-insensitive key was joined on the driver")
     assert(rows(g, collated) == rows(g, parquet(collated)) && rows(g, collated).size == 5)
   }
 
@@ -127,24 +126,27 @@ class JoinFoldSpec extends AnyFunSuite {
     }
   }
 
-  test("a join whose output rows pass the byte bound stays a Spark join") {
-    // 1100 x 1100 rows on one key: 1.21 M output rows of (k, v, k, v), about
-    // 116 MB as UnsafeRows, over the 16 MB bound
+  test("a 1.21 M-pair join streams into its aggregate") {
+    // on the calling thread, building no joined row on the driver
+    // 1100 x 1100 rows on one key: 1.21 M join pairs of (k, v, k, v), about
+    // 116 MB if they were built as UnsafeRows
     val one = (1 to 1100).map(i => Row(1, i.toDouble, i.toLong))
     val g = session(one, one)
     val q = "SELECT count(*) AS n, sum(l.v + r.v) AS s FROM l JOIN r ON l.k = r.k"
-    // the fold sizes the output before building it: declining (in every
-    // optimizer iteration) builds no row
-    val built = ClockSafeConvertToLocalRelation.joinRowsBuilt
+    assert(direct(g, q), "the join did not run on the calling thread")
+    val built = DirectPlan.joinRowsBuilt
     val before = built.sum
-    assert(plan(g, q).exists(_.isInstanceOf[Join]), "the bounded join was folded")
-    assert(built.sum == before, "the declined join built output rows")
-    assert(g.sql(q).rows.map(_.toString) == Seq(s"[1210000,${2L * 1100 * (1100 * 1101 / 2)}]"))
-    // the same shape under the bound folds: 400 x 400 rows of (k, k), 13 MB
-    val small = "SELECT count(*) AS n FROM l JOIN r ON l.k = r.k AND l.v <= 400 AND r.v <= 400"
+    val runs = g.cacheStats.driverRuns
+    val got = g.sql(q).rows.map(_.toString)
+    assert(got == Seq(s"[1210000,${2L * 1100 * (1100 * 1101 / 2)}]"))
+    assert(got == rows(g, parquet(q)), "the count and sum differ from Spark's")
+    assert(g.cacheStats.driverRuns == runs + 1, "the join ran a Spark job")
+    assert(built.sum == before, "the aggregated join built joined rows")
+    // a join returned as rows builds exactly its output rows: 400 x 400
+    val small = "SELECT l.v AS a, r.v AS b FROM l JOIN r ON l.k = r.k AND l.v <= 400 AND r.v <= 400"
+    assert(direct(g, small))
     val beforeSmall = built.sum
-    assert(plan(g, small).isInstanceOf[LocalRelation])
+    assert(g.sql(small).rowCount == 160000)
     assert(built.sum - beforeSmall == 160000L)
-    assert(g.sql(small).rows.head.getLong(0) == 160000L)
   }
 }

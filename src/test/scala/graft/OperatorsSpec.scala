@@ -50,11 +50,13 @@ class OperatorsSpec extends AnyFunSuite {
       def payload(tag: String, i: Int): String =
         java.security.MessageDigest.getInstance("MD5")
           .digest(s"$tag$i".getBytes).map("%02x".format(_)).mkString * 2
-      val a = (1 to 850).map(i =>
-        (if (i <= 800) "the quick brown" else s"cold$i", payload("a", i)))
+      // RDD-based sides: on a session with GraftExtensions, a join of two
+      // local relations runs on the calling thread, not as a Spark join
+      val a = spark.sparkContext.parallelize((1 to 850).map(i =>
+        (if (i <= 800) "the quick brown" else s"cold$i", payload("a", i))), 4)
         .toDF("tail", "pa")
-      val b = (1 to 840).map(i =>
-        (if (i <= 800) "the quick brown" else s"cold$i", payload("b", i)))
+      val b = spark.sparkContext.parallelize((1 to 840).map(i =>
+        (if (i <= 800) "the quick brown" else s"cold$i", payload("b", i))), 4)
         .toDF("head", "pb")
       // the aggregate must touch BOTH payloads (defeats column pruning);
       // execute THIS dataset so its AQE finalizes, then read the plan
