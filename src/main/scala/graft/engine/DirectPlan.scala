@@ -3,6 +3,7 @@ package graft.engine
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.LongAdder
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -59,6 +60,10 @@ object DirectPlan {
     * a buffer (a hash table, a sort, or the collected result), since the JVM
     * started. Pairs that stream into an aggregate build none. */
   private[graft] val joinRowsBuilt = new LongAdder
+
+  /** Heap bytes of a copied `UnsafeRow` besides its data: the row object,
+    * the header of its byte array and the reference that holds it. */
+  private[graft] val RowHeapBytes = 64L
 
   /** The node for `plan`, or None when some part of it is refused. At the
     * root of a query (`root`) any accepted plan but a bare `LocalRelation`
@@ -483,9 +488,10 @@ object DirectPlan {
   * `executeCollect` and `executeTake` run it on the calling thread over the
   * versions pinned into its plan; `doExecute` runs the same iterators in a
   * one-partition Spark job, so a Spark parent still works and nothing the
-  * operators hold is built on the driver. `collectLive` is the facade's
-  * entry point: it reads each slot's current version, once, and skips
-  * Spark's action wrapper. */
+  * operators hold is built on the driver. `collectLive` (for reads) and
+  * `collectLiveRows` (for materializations) are the facade's entry points:
+  * they read each slot's current version, once, and skip Spark's action
+  * wrapper. */
 case class DirectPlanExec(output: Seq[Attribute], root: DirectPlan.DirectOp) extends LeafExecNode {
   import DirectPlan._
 
@@ -515,12 +521,21 @@ case class DirectPlanExec(output: Seq[Attribute], root: DirectPlan.DirectOp) ext
     (out, read)
   }
 
-  private def copied(rows: Iterator[InternalRow], n: Int): Array[InternalRow] = {
+  /** At most `n` rows as copied `UnsafeRow`s, and their heap bytes. Copying
+    * stops once the bytes pass `maxBytes`, so at most one row more is held. */
+  private def copied(rows: Iterator[InternalRow], n: Int, maxBytes: Long): (Array[InternalRow], Long) = {
     val p = toUnsafe.take()
-    val out = rows.take(n).map(r => p(r).copy(): InternalRow).toArray
+    val out = mutable.ArrayBuilder.make[InternalRow]
+    var (count, bytes) = (0, 0L)
+    while (count < n && bytes <= maxBytes && rows.hasNext) {
+      val r = p(rows.next()).copy()
+      out += r
+      count += 1
+      bytes += r.getSizeInBytes + RowHeapBytes
+    }
     toUnsafe.give(p)
-    if (root.pairs) joinRowsBuilt.add(out.length)
-    out
+    if (root.pairs) joinRowsBuilt.add(count)
+    (out.result(), bytes)
   }
 
   /** The rows of the current version of every slot, as the facade returns
@@ -533,9 +548,17 @@ case class DirectPlanExec(output: Seq[Attribute], root: DirectPlan.DirectOp) ext
     Result(rows, read)
   }
 
-  override def executeCollect(): Array[InternalRow] = run(live = false)(copied(_, Int.MaxValue))._1
+  /** The rows of the current version of every slot as copied `UnsafeRow`s,
+    * and their heap bytes; None as soon as those pass `maxBytes`. */
+  def collectLiveRows(maxBytes: Long): Option[(DriverRows, Long)] = {
+    val ((rows, bytes), _) = run(live = true)(copied(_, Int.MaxValue, maxBytes))
+    if (bytes > maxBytes) None else Some((new DriverRows(ArraySeq.unsafeWrapArray(rows)), bytes))
+  }
 
-  override def executeTake(n: Int): Array[InternalRow] = run(live = false)(copied(_, n))._1
+  override def executeCollect(): Array[InternalRow] =
+    run(live = false)(copied(_, Int.MaxValue, Long.MaxValue))._1._1
+
+  override def executeTake(n: Int): Array[InternalRow] = run(live = false)(copied(_, n, Long.MaxValue))._1._1
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (inputs, _) = bind(live = false)

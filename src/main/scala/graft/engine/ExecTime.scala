@@ -115,8 +115,14 @@ object ExecTimeRewrite extends Rule[LogicalPlan] {
     * Either way a cached plan holding one must be planned afresh for each
     * execution: AQE re-runs a cached executed plan over its materialized
     * stages, so a clock below an exchange would replay its first value. */
-  def hasClockExpr(e: Expression): Boolean = e.exists {
+  def hasClockExpr(e: Expression): Boolean = hasFoldedClock(e) || e.exists {
     case _: ExecCurrentTimestamp | _: ExecCurrentDate | _: ExecLocalTimestamp => true
+    case _ => false
+  }
+
+  /** True when `e` holds a stock clock expression, which the optimizer
+    * folds into a literal of the plan. */
+  def hasFoldedClock(e: Expression): Boolean = e.exists {
     case _: CurrentTimestampLike | _: CurrentDate | _: LocalTimestamp | _: CurrentTime => true
     case _ => false
   }

@@ -73,9 +73,13 @@ import org.apache.spark.util.SizeEstimator
   *    properties, so concurrent callers on different threads each see their
   *    own clock, mirroring the reference's thread-local
   *    `DirectExecutionContext` but cluster-safe. A plan holding a clock
-  *    expression caches only its analyzed plan and is planned afresh on
-  *    every call, because AQE would otherwise replay the first call's
-  *    clock from its materialized stages.
+  *    expression is never frozen. One that runs on the calling thread keeps
+  *    its node, which reads the clock of each execution; any other caches
+  *    only its analyzed plan and is planned afresh on every call, because
+  *    AQE would otherwise replay the first call's clock from its
+  *    materialized stages (as would a node the optimizer folded a clock
+  *    into: `current_time()`, or any clock on a session built without
+  *    GraftExtensions).
   *  - Small file tables registered through `registerTable(name, df)` are
   *    served from driver snapshots, the reference's `NamedLocalRelation`
   *    tables: a deterministic, clock-free batch DataFrame whose leaves are
@@ -90,8 +94,8 @@ import org.apache.spark.util.SizeEstimator
   *    atomically: a command that lands while the snapshot is swapped in is
   *    overwritten.)
   *    The collected rows are bounded per table and per facade
-  *    (`MaxSnapshotBytes`, `MaxSnapshotsBytes`); a table over a bound keeps
-  *    its live view. A `DataTable` registered through
+  *    (`MaxSnapshotBytes`, `MaxSnapshotsBytes`, shared with the results of
+  *    `executeAndRegister`); a table over a bound keeps its live view. A `DataTable` registered through
   *    `registerTable(name, table)` is held in a `DriverRelation` at once.
   *    That leaf keeps its rows out of Catalyst's expression walks, and
   *    names a version slot rather than rows. A plan over snapshots and
@@ -102,9 +106,17 @@ import org.apache.spark.util.SizeEstimator
   *    uses generated code only where that cannot inline a literal of the
   *    query text, so an ad-hoc text that differs from an earlier one only in
   *    a literal compiles nothing.
+  *  - `executeAndRegister` splits the same way (the reference's
+  *    `executeAndRegisterTempView`): a plan whose root is a `DirectPlanExec`
+  *    runs on the calling thread, its rows are collected as `UnsafeRow`s and
+  *    published under the name as a `DataTable` registration is, so a
+  *    same-schema re-materialization keeps the plans that read the name.
+  *    Those rows count against the snapshot bounds, and collection stops as
+  *    soon as they pass one (at most one row more is held); such a result,
+  *    and every other plan, is checkpointed by a Spark job instead. A name's
+  *    bytes are released when it is registered again.
   *  - Executions of everything else are plain Spark jobs: thread-safe,
-  *    spill-aware, distributed. `executeAndRegister` keeps its Spark job
-  *    even over driver tables. A calling-thread plan holds on the driver
+  *    spill-aware, distributed. A calling-thread plan holds on the driver
   *    what its operators must hold (a join's hash table over its build
   *    side, an aggregate's groups, a sort's rows), with no bound of its own;
   *    rows between operators stream.
@@ -149,8 +161,8 @@ class GraftSession private (val spark: SparkSession) {
     * before `lock`, never after. */
   private val pending = new ConcurrentHashMap[String, Pending]()
   private val views = new Object
-  /** Bytes of the snapshots the catalog holds, by view key; guarded by
-    * `views`. */
+  /** Bytes of the snapshots and materialized results the catalog holds, by
+    * view key; guarded by `views`. */
   private val snapshots = new java.util.HashMap[String, java.lang.Long]()
   private var snapshotBytes = 0L
   /** The `DataTable`s registered through the facade, by view key, while the
@@ -194,9 +206,10 @@ class GraftSession private (val spark: SparkSession) {
   }
 
   /** The DataFrame to run for `sqlText`, and the cache entry behind it
-    * (null when the text is not cached). Compiles outside the lock, so
-    * unrelated statements analyze in parallel. */
-  private def lookup(sqlText: String): Lookup = {
+    * (null when the text is not cached; null for a hit the caller runs with
+    * the entry's calling-thread node, when `direct`). Compiles outside the
+    * lock, so unrelated statements analyze in parallel. */
+  private def lookup(sqlText: String, direct: Boolean): Lookup = {
     var hit: Entry = null
     var hitDf: DataFrame = null
     var prior: Sighting = null
@@ -213,7 +226,8 @@ class GraftSession private (val spark: SparkSession) {
       }
     }
     if (hit != null) {
-      if (hit.clock) Lookup(hit, DatasetBridge.ofRows(spark, hit.analyzed), Clock)
+      if (hit.clock && !(direct && hit.direct != null))
+        Lookup(hit, DatasetBridge.ofRows(spark, hit.analyzed), Clock)
       // null for a frozen entry that holds no DataFrame
       else Lookup(hit, hitDf, Hit)
     } else {
@@ -387,15 +401,14 @@ class GraftSession private (val spark: SparkSession) {
     * thread, over the current version of each driver table it reads, with
     * no Spark job and without Spark's action wrapper. */
   def sql(sqlText: String): DataTable = {
-    val l = lookup(sqlText)
+    val l = lookup(sqlText, direct = true)
     val e = l.entry
     val frozen = if (e == null) null else e.result
     if (frozen != null) { counters.resultHits.increment(); frozen }
     else {
       counters.count(l.outcome)
       val direct = if (e != null && e.direct != null) e.direct else directRoot(e, l.df)
-      GraftExecutionContext.begin(spark)
-      try {
+      executing {
         if (direct != null) {
           val run = direct.collectLive()
           counters.driverRuns.increment()
@@ -409,21 +422,28 @@ class GraftSession private (val spark: SparkSession) {
           if (e != null && e.state == Pending) settle(e, l.df, result)
           result
         }
-      } finally GraftExecutionContext.end(spark)
+      }
     }
+  }
+
+  /** `body` with this thread's execution clock frozen. */
+  private def executing[T](body: => T): T = {
+    GraftExecutionContext.begin(spark)
+    try body finally GraftExecutionContext.end(spark)
   }
 
   /** The `DirectPlanExec` at the root of `df`'s executed plan, or null. An
     * entry `e` that runs it keeps the node and lets go of `df` (the node
-    * binds its tables' rows when it runs, so it outlives a rebind); a text
-    * with a clock expression is planned afresh on every call instead. */
+    * binds its tables' rows and reads the clock when it runs, so it
+    * outlives a rebind), unless the optimizer folded a clock into it. */
   private def directRoot(e: Entry, df: DataFrame): DirectPlanExec =
     if (df.isStreaming) null
     else df.queryExecution.executedPlan match {
       case d: DirectPlanExec =>
-        if (e != null && !e.clock) lock.synchronized {
-          if (e.direct == null && (cache.get(e.text) eq e)) { e.direct = d; release(e) }
-        }
+        if (e != null && !(e.clock && e.analyzed.exists(_.expressions.exists(ExecTimeRewrite.hasFoldedClock))))
+          lock.synchronized {
+            if (e.direct == null && (cache.get(e.text) eq e)) { e.direct = d; release(e) }
+          }
         d
       case _ => null
     }
@@ -445,7 +465,7 @@ class GraftSession private (val spark: SparkSession) {
     * analyzed plan; a text with a clock expression gets a new DataFrame over
     * its cached analyzed plan on every call. */
   def sqlDF(sqlText: String): DataFrame = {
-    val l = lookup(sqlText)
+    val l = lookup(sqlText, direct = false)
     counters.count(l.outcome)
     if (l.df != null) l.df else lend(l.entry)
   }
@@ -461,21 +481,48 @@ class GraftSession private (val spark: SparkSession) {
     * the same table: the cached plans that read it are kept, and only their
     * frozen rows are dropped (see `rebind`). */
   def registerTable(name: String, table: DataTable): Unit = {
+    publish(name, table.schema, DriverRows.of(table.schema, table.rows), 0L)
+    ()
+  }
+
+  /** Register `rows` of `schema` as the temp view `name`, as
+    * `registerTable(name, table)` does, and count `bytes` of them against
+    * the snapshot bounds (0 for a caller's `DataTable`); false, registering
+    * nothing, when they do not fit. */
+  private def publish(name: String, schema: StructType, rows: DriverRows, bytes: Long): Boolean = {
     val view = mangle(name)
     val key = viewKey(view)
-    val rows = DriverRows.of(table.schema, table.rows)
     views.synchronized {
-      val b = tables.get(key)
-      if (b != null && b.schema == table.schema &&
-          DatasetBridge.tempView(spark, view).exists(_ eq b.registered)) rebind(key, b.slot, rows)
-      else {
-        val slot = new DriverSlot(rows)
-        replaceView(view, key,
-          DatasetBridge.ofRows(spark, DriverRelation(DataTypeUtils.toAttributes(table.schema), slot)),
-          candidate = false)
-        tables.put(key, Bound(table.schema, slot, DatasetBridge.tempView(spark, view).orNull))
+      bytes <= room(key) && {
+        val b = tables.get(key)
+        if (b != null && b.schema == schema &&
+            DatasetBridge.tempView(spark, view).exists(_ eq b.registered)) rebind(key, b.slot, rows)
+        else {
+          val slot = new DriverSlot(rows)
+          replaceView(view, key,
+            DatasetBridge.ofRows(spark, DriverRelation(DataTypeUtils.toAttributes(schema), slot)),
+            candidate = false)
+          tables.put(key, Bound(schema, slot, DatasetBridge.tempView(spark, view).orNull))
+        }
+        hold(key, bytes)
+        true
       }
     }
+  }
+
+  /** The bytes view key `key` may hold on the driver: the per-table bound,
+    * or what the facade's bound leaves once `key`'s own bytes are released.
+    * Guarded by `views`. */
+  private def room(key: String): Long = {
+    val own = snapshots.get(key)
+    math.min(MaxSnapshotBytes, MaxSnapshotsBytes - snapshotBytes + (if (own == null) 0L else own.longValue))
+  }
+
+  /** Count `bytes` as what view key `key` holds on the driver, in place of
+    * what it held. Guarded by `views`. */
+  private def hold(key: String, bytes: Long): Unit = {
+    val old = if (bytes > 0) snapshots.put(key, bytes) else snapshots.remove(key)
+    snapshotBytes += bytes - (if (old == null) 0L else old.longValue)
   }
 
   /** Register `df` as the temp view `name`. A small file table becomes a
@@ -491,8 +538,7 @@ class GraftSession private (val spark: SparkSession) {
     * it. Guarded by `views`. */
   private def replaceView(view: String, key: String, df: DataFrame, candidate: Boolean): Unit = {
     df.createOrReplaceTempView(view)
-    val old = snapshots.remove(key)
-    if (old != null) snapshotBytes -= old
+    hold(key, 0L)
     tables.remove(key)
     if (candidate) pending.put(key, new Pending(key, view, df, DatasetBridge.tempView(spark, view).orNull))
     else pending.remove(key)
@@ -559,14 +605,12 @@ class GraftSession private (val spark: SparkSession) {
         catch { case NonFatal(e) => pending.remove(p.key, p); throw e }
       val bytes = if (rows == null) 0L else SizeEstimator.estimate(rows)
       views.synchronized {
-        if (rows != null && current && bytes <= MaxSnapshotBytes &&
-            snapshotBytes + bytes <= MaxSnapshotsBytes) {
+        if (rows != null && current && bytes <= room(p.key)) {
           val attrs = p.df.queryExecution.analyzed.output
             .map(a => AttributeReference(a.name, a.dataType, a.nullable, a.metadata)())
           val snapshot = DriverRelation(attrs, new DriverSlot(new DriverRows(ArraySeq.unsafeWrapArray(rows))))
           DatasetBridge.ofRows(spark, snapshot).createOrReplaceTempView(p.view)
-          snapshots.put(p.key, bytes)
-          snapshotBytes += bytes
+          hold(p.key, bytes)
           invalidate(p.key)
         }
         pending.remove(p.key, p)
@@ -582,26 +626,35 @@ class GraftSession private (val spark: SparkSession) {
 
   /** Execute and register the result as a temp view; returns row count
     * (reference `executeAndRegisterTempView`, `DirectSparkSession.scala:
-    * 181-219`). Materialized eagerly so downstream queries read a stable
-    * snapshot — but DISTRIBUTED: `localCheckpoint` pins the computed
-    * partitions in executor storage (the reference collects to the driver
-    * heap because it is single-node; at 100 TB that is the one thing this
-    * method must never do). Checkpointing also severs plan lineage, so the
-    * snapshot cannot be re-matched by the CacheManager against later
-    * executions of the same SQL — which keeps exec-time clock expressions
-    * in *future* `sql()` calls live rather than frozen to this snapshot.
-    * The text is compiled without touching the plan cache: a snapshot runs
-    * its plan once, over the driver snapshots of the tables it reads. */
+    * 181-219`). Materialized eagerly, so later queries read a stable
+    * result, with its clock values frozen. The text is compiled without
+    * touching the plan cache, over the driver snapshots of the tables it
+    * reads. Where the result lives depends on the plan:
+    *  - a plan whose root is a `DirectPlanExec` (all its inputs are on the
+    *    driver) runs on the calling thread with no Spark job, and its rows
+    *    are kept on the driver as copied `UnsafeRow`s, registered as a
+    *    `DataTable` is (see `registerTable`), within the snapshot bounds.
+    *    Collection stops as soon as the rows pass a bound;
+    *  - every other plan, and a driver plan past a bound, is checkpointed:
+    *    `localCheckpoint` pins the computed partitions in executor storage,
+    *    so a large result never reaches the driver. Checkpointing also
+    *    severs plan lineage, so the CacheManager cannot match the result
+    *    against later executions of the same text, whose clocks stay live. */
   def executeAndRegister(sqlText: String, name: String): Long = {
     val df = compile(spark.sql(sqlText))
     if (isCommand(df)) invalidateAll()
-    GraftExecutionContext.begin(spark)
-    val snap =
-      try df.localCheckpoint(true)
-      finally GraftExecutionContext.end(spark)
-    registerTable(name, snap)
-    // counts over the checkpointed partitions — no recompute, no driver rows
-    snap.count()
+    val direct = directRoot(null, df)
+    val held =
+      if (direct == null) None
+      else executing(direct.collectLiveRows(views.synchronized(room(viewKey(mangle(name))))))
+    held match {
+      case Some((rows, bytes)) if publish(name, df.schema, rows, bytes) => rows.rows.length.toLong
+      case _ =>
+        val snap = executing(df.localCheckpoint(true))
+        registerTable(name, snap)
+        // counts over the checkpointed partitions — no recompute, no driver rows
+        snap.count()
+    }
   }
 }
 
@@ -634,7 +687,8 @@ object GraftSession {
   private case object Frozen extends State
   /** Re-runs its executed plan. */
   private case object Pinned extends State
-  /** Holds a clock expression: keeps the analyzed plan only. */
+  /** Holds a clock expression: never frozen; keeps the analyzed plan, and
+    * the calling-thread node that runs it, if any. */
   private case object Replanned extends State
 
   /** One cached text. `deps` are the relation names its analyzed plan
@@ -679,7 +733,8 @@ object GraftSession {
   /** Plan-cache counters of one facade. Each `sql` or `sqlDF` call counts
     * once, in one of the first six:
     *  - `resultHits`: `sql` returned frozen rows, with no Spark job;
-    *  - `planHits`: a cached plan was run, or returned by `sqlDF`;
+    *  - `planHits`: a cached plan was run (a clock text's calling-thread
+    *    node included), or returned by `sqlDF`;
     *  - `misses`: compiled on a later sighting and cached, unless a write
     *    overlapped the compile;
     *  - `firstSightings`: compiled and not cached, as the text was new;

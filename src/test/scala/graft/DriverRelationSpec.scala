@@ -154,8 +154,8 @@ class DriverRelationSpec extends AnyFunSuite {
     assert(g.executeAndRegister(q, "written") == 5L)
     assert(isDriverTable(g, "orders"))
     assert(sorted(g.sql("SELECT * FROM written")) == live(g, q))
-    // the written table is checkpointed, not held on the driver
-    assert(!isDriverTable(g, "written"))
+    // the written table is held on the driver: its plan ran there
+    assert(isDriverTable(g, "written"))
   }
 
   test("clock and rand() reads of a DataTable stay live") {
@@ -165,13 +165,24 @@ class DriverRelationSpec extends AnyFunSuite {
     val t1 = ts()
     Thread.sleep(15)
     val t2 = ts()
+    // the text is cached now with its calling-thread node, which later calls
+    // run again with no re-plan
+    val warm = g.cacheStats
     Thread.sleep(15)
     val t3 = ts()
-    assert(t2 > t1 && t3 > t2, s"a clock read of a DataTable was frozen: $t1, $t2, $t3")
+    Thread.sleep(15)
+    val t4 = ts()
+    assert(t2 > t1 && t3 > t2 && t4 > t3, s"a clock read of a DataTable was frozen: $t1, $t2, $t3, $t4")
+    val later = g.cacheStats
+    assert(later.clockReplans == warm.clockReplans && later.driverRuns == warm.driverRuns + 2 &&
+      later.planHits == warm.planHits + 2 && later.resultHits == warm.resultHits, s"$later")
     // the clock aggregate runs on the calling thread and reads the clock of
-    // each execution, not one bound into the cached plan
-    val clocked = g.sqlDF(clock).queryExecution.executedPlan
-    assert(clocked.isInstanceOf[DirectPlanExec], s"a clock aggregate is not a calling-thread plan:\n$clocked")
+    // each execution, not one bound into the cached plan; sqlDF returns a
+    // new DataFrame over the analyzed plan on every call
+    val clocked = g.sqlDF(clock)
+    assert(clocked ne g.sqlDF(clock))
+    assert(clocked.queryExecution.executedPlan.isInstanceOf[DirectPlanExec],
+      s"a clock aggregate is not a calling-thread plan:\n${clocked.queryExecution.executedPlan}")
 
     // rand(7) over the same rows as a LocalRelation: the same values; the
     // plan stays a Spark plan and its rows are never frozen
@@ -202,6 +213,16 @@ class DriverRelationSpec extends AnyFunSuite {
       .collect().map(_.toString).toSeq.sorted
     assert(sorted(g.sql(q)) == want)
     assert(g.table("plain_t").rowCount == 2000)
+    // the optimizer folds a stock clock into the plan here, so a clock text
+    // is planned afresh on every call rather than kept as a node
+    val clock = "SELECT max(current_timestamp()) AS ts FROM plain_t"
+    def ts(): Long = g.sql(clock).rows.head.getTimestamp(0).getTime
+    val t1 = ts()
+    Thread.sleep(15)
+    val t2 = ts()
+    Thread.sleep(15)
+    val t3 = ts()
+    assert(t2 > t1 && t3 > t2, s"a folded clock was kept in a cached node: $t1, $t2, $t3")
   }
 
   test("explain of a plan over a snapshot or a DataTable does not print its rows") {

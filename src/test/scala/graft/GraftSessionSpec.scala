@@ -114,8 +114,8 @@ class GraftSessionSpec extends AnyFunSuite {
       "SELECT id, id * 2 AS v FROM range(100000)", "snap.big")
     assert(n == 100000L)
     val view = g.spark.table("snap__g__big")
-    // the old collect-and-recreate path produced a LocalRelation (all rows on
-    // the driver); the checkpointed path scans executor-held partitions
+    // range(...) is not driver-resident, so the result is checkpointed: its
+    // view scans executor-held partitions, and no rows reach the driver
     val analyzed = view.queryExecution.analyzed.toString
     assert(!analyzed.contains("LocalRelation"),
       s"snapshot materialized on the driver:\n$analyzed")
